@@ -21,39 +21,11 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ANSI is the Spark 4 default; pinned so the repo's numeric-budget
-      // overflows fail loudly even under cluster-level config drift.
-      .config("spark.sql.ansi.enabled", "true")
-      .getOrCreate()
-    // ERROR, not WARN: benign per-query WARNs (e.g. AQE notices) multiplied
-    // by 60+ queries x 3 passes can alone overflow the driver's output tail
-    // and erase the JSON record.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.localSession()
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // Timing sink: a `noop`-format write, NOT count(). count() on a
-    // trivially-projected query can collapse to Parquet's count-aggregate
-    // pushdown (never executing the projections being timed); the noop
-    // sink fully evaluates every output row and discards it.
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    names.foreach { name => // warmup: JIT + codegen cache, result discarded
-      try run(name)
-      catch { case _: Throwable => () }
-    }
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      try run(name)
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timed(name: String): Timing =
+      timeNoop(SparkEntry.queries(name)(spark, sfDir))
+    names.foreach(timed) // warmup: JIT + codegen cache, result discarded
     // Committed per-query history, read BEFORE this run overwrites the
     // detail file — the r10 verdict's mid-pack stall evidence (entries 2-6x
     // their unchanged-code history, invisible to a top-5-only sentinel).
@@ -63,7 +35,11 @@ object Bench {
     // min of two timed passes: the environment shows intermittent multi-10x
     // stalls (external CPU contention / JIT storms) that would otherwise be
     // billed to whichever query they land on; the min is the steady-state.
-    val firstPass = names.map { name => name -> math.min(timed(name), timed(name)) }
+    // A query that throws in any timed pass is reported as failed and kept
+    // out of the total: its time-to-failure is not a query time.
+    val passes = names.map(name => name -> Seq(timed(name), timed(name)))
+    val firstPass = passes.collect {
+      case (name, ts) if ts.forall(_.ok) => name -> ts.map(_.seconds).min }
     // Variance sentinel: twice now a driver record has carried a 10-16x
     // anomalous entry that local steady state contradicted (machine-stall
     // regime, BASELINE.md footnotes 10/13 + the r8 triples entry). Re-time
@@ -84,10 +60,18 @@ object Bench {
         !top5Names.contains(n) && history.get(n).exists(h => h > 0 && v > 2 * h) }
       .sortBy { case (n, v) => -(v / history(n)) }
       .take(MaxHistoryReruns)
-    val sentinel = (top5 ++ inflated)
+    val reruns = (top5 ++ inflated)
       .map { case (name, suiteSec) => (name, suiteSec, timed(name)) }
+    val sentinel = reruns.collect { case (n, a, t) if t.ok => (n, a, t.seconds) }
+    val failed =
+      passes.flatMap { case (n, ts) => ts.flatMap(_.failure).take(1).map(n -> _) } ++
+        reruns.flatMap { case (n, _, t) => t.failure.map(n -> _) }
+    failed.foreach { case (n, e) =>
+      System.err.println(s"[bench] $n failed: ${e.getMessage}") }
+    val failedNames = failed.map(_._1)
     val results = selfCorrect(firstPass, sentinel)
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+      .filterNot { case (n, _) => failedNames.contains(n) }
+    val total = results.map(_._2).sum
     // One-time artifact build cost (r9 ADVICE): the timed passes ride the
     // session memos by design, so the cold-session cost of each memoized
     // artifact is re-measured explicitly (invalidate -> rebuild) and
@@ -103,9 +87,10 @@ object Bench {
     // written BEFORE the final line so nothing prints after it.
     writeDetail(detailPath,
       s"""{"total":${f3(total)},"n":${results.size},"queries":${jMap(results)},""" +
+        s""""failed":${failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""sentinel":${jSentinel(sentinel)},"artifact_sec":${jMap(artifacts)},""" +
         s""""ingest_rows_per_sec":${f3(ingest.rowsPerSec)},"sf":"$sfDir"}""")
-    val line = finalLine(results, ingest, sfDir, sentinel, artifacts)
+    val line = finalLine(results, ingest, sfDir, sentinel, artifacts, failedNames.size)
     // Durable copy of the EXACT final line (r13 verdict task 2): thirteen
     // straight driver records carry `parsed: null` because the stdout line
     // reached the log behind sbt's `[info] ` logger prefix. The line is now
@@ -178,12 +163,8 @@ object Bench {
     // artifact_sec (r10 ADVICE): the sign is the error marker — negative
     // seconds = the build threw, magnitude = when it died.
     def t(body: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { body.write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (ok) sec else -sec
+      val r = timeNoop(body)
+      if (r.ok) r.seconds else -r.seconds
     }
     graft.ops.Recommend.invalidateRecommendations()
     graft.ops.Graph.invalidateInteractionGraphs()
@@ -211,6 +192,27 @@ object Bench {
       })
   }
 
+  /** One timed run into the `noop` sink: `seconds` runs to completion or
+    * to the throw, and `failure` holds the throw.
+    */
+  private[graft] case class Timing(seconds: Double, failure: Option[Throwable]) {
+    def ok: Boolean = failure.isEmpty
+  }
+
+  /** Times `df` — construction included, since a query's build can run
+    * eager jobs — into a `noop`-format write, NOT count(): count() on a
+    * trivially-projected query can collapse to Parquet's count-aggregate
+    * pushdown (never executing the projections being timed); the noop sink
+    * fully evaluates every output row and discards it.
+    */
+  private[graft] def timeNoop(df: => DataFrame): Timing = {
+    val t0 = System.nanoTime()
+    val failure =
+      try { df.write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable => Some(e) }
+    Timing((System.nanoTime() - t0) / 1e9, failure)
+  }
+
   /** Driver tail capacity the final line must fit inside, with headroom. */
   private[graft] val TailBudget = 1900
 
@@ -226,11 +228,12 @@ object Bench {
   private[graft] def finalLine(
       results: Seq[(String, Double)], ingest: IngestBench, sfDir: String,
       sentinel: Seq[(String, Double, Double)] = Nil,
-      artifacts: Seq[(String, Double)] = Nil): String = {
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+      artifacts: Seq[(String, Double)] = Nil, failed: Int = 0): String = {
+    val total = results.map(_._2).sum
     val slowest = results.sortBy { case (_, v) => -v }
     def line(topN: Int, sentN: Int): String =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},""" +
+        s""""failed":$failed,""" +
         s""""protocol":"min3-top5+hist2x",""" +
         s""""queries":${jMap(slowest.take(topN))},""" +
         s""""sentinel":${jSentinel(sentinel.take(sentN))},""" +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: scales a TESTDATA.md fixture directory by an integer factor
@@ -32,8 +32,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val Array(src, dst) = args.take(2)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = Tables.localSession("graft-genscale")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(name: String) = spark.read.parquet(s"$src/$name.parquet")

@@ -42,17 +42,7 @@ object IngestScale {
 
   def main(args: Array[String]): Unit = {
     val filesTimed = if (args.nonEmpty) args(0).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ANSI is the Spark 4 default; pinned so the repo's numeric-budget
-      // overflows fail loudly even under cluster-level config drift.
-      .config("spark.sql.ansi.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
 
     val sizes = Seq(("10k", 32, 32), ("100k", 100, 100), ("1M", 316, 316))
     val priors = Seq(10, 100)
@@ -145,17 +135,7 @@ object IngestEase {
   def main(args: Array[String]): Unit = {
     val filesTimed = if (args.nonEmpty) args(0).toInt else 2
     val prior = args.lift(1).map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ANSI is the Spark 4 default; pinned so the repo's numeric-budget
-      // overflows fail loudly even under cluster-level config drift.
-      .config("spark.sql.ansi.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
     if (args.contains("decomp")) decomp(spark, prior)
     else println(IngestScale.oneCell(spark, "EASE_17M", 432, 432, prior,
       filesTimed, nLead = 93))

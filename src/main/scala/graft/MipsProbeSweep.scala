@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-cost curve for the MIPS IVF scale path: for each nProbe in
@@ -20,37 +19,25 @@ import org.apache.spark.sql.functions._
   */
 object MipsProbeSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ANSI is the Spark 4 default; pinned so the repo's numeric-budget
-      // overflows fail loudly even under cluster-level config drift.
-      .config("spark.sql.ansi.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(5)
     val queryMod = args.lift(2).map(_.toInt).getOrElse(50)
     val emb = Tables.embeddings(spark, dir)
+    def ivf(nProbe: Int): Bench.Timing = Bench.timeNoop(
+      graft.ops.Similarity.mipsIvfTopK(emb, k, queryMod, 16, nProbe))
     // JIT/scan warmup so the curve measures plan cost, not first-pass
     // compilation (the Diag protocol's lesson): one unrecorded pass
-    graft.ops.Similarity.mipsIvfTopK(emb, k, queryMod, 16, 1)
-      .write.format("noop").mode("overwrite").save()
+    ivf(1).failure.foreach(throw _)
     for (nProbe <- Seq(1, 2, 4, 8)) {
-      val t0 = System.nanoTime()
-      graft.ops.Similarity.mipsIvfTopK(emb, k, queryMod, 16, nProbe)
-        .write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val t = ivf(nProbe)
+      t.failure.foreach(throw _)
       val rep = graft.ops.Similarity
         .mipsRecallReport(emb, k, queryMod, 16, nProbe)
         .agg(avg(col("recall")).as("r"), count(lit(1)).as("q"))
         .head()
       println(f"MIPSSWEEP nprobe=$nProbe%d mean_recall=${rep.getDouble(0)}%.4f " +
-        f"wall_ivf=$wall%.3f queries=${rep.getLong(1)}%d")
+        f"wall_ivf=${t.seconds}%.3f queries=${rep.getLong(1)}%d")
     }
     spark.stop()
   }

@@ -50,7 +50,10 @@ object SparkEntry {
     graft.operators.GlobalRowNumber.withGlobalRowNumber(
       latestViewBody(s, dir), "forecast_id", Seq(col("o_orderkey")))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every named query, by name; built once, since callers look names up
+    * per query.
+    */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- flagship --------------------------------------------------------
     "latest_view" -> ((s, dir) => latestView(s, dir)),
 
@@ -3269,7 +3272,10 @@ object SparkEntry {
       |        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn FROM s)
       |WHERE rn <= 3""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  /** The DuckDB oracle SQL of every query in [[queries]], by name. Declared
+    * after the `*Sql` fragment vals it interpolates, so they are set first.
+    */
+  val oracleSql: Map[String, String] = Map(
     "dedup_edit_distance" -> // partition-filter candidates (pigeonhole:
       // edit distance <= 3 forces one of the 4 key segments to match
       // within a +-3 shift -- answer-preserving for levenshtein; the

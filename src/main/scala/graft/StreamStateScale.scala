@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -34,17 +33,7 @@ object StreamStateScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val slices = args.lift(1).map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ANSI is the Spark 4 default; pinned so the repo's numeric-budget
-      // overflows fail loudly even under cluster-level config drift.
-      .config("spark.sql.ansi.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession()
     import spark.implicits._
 
     val events = Tables.events(spark, sfDir)

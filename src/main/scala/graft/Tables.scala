@@ -46,14 +46,17 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** Session factory for library consumers / tests (the driver's Verify/Bench
-    * mains build their own). local[32] mirrors the bench harness; on a real
-    * cluster these settings come from spark-submit and this is not used.
+  /** The repo's one session factory: every main and the test suite build
+    * their session here, so the settings cannot drift apart. `cores`
+    * defaults to `SPARK_GRAFT_CPUS`, else the machine's processor count. On
+    * a real cluster these settings come from spark-submit and this is not
+    * used.
     */
-  def localSession(appName: String = "graft", cores: Int = 32): SparkSession =
-    SparkSession.builder()
+  def localSession(
+      cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -62,4 +65,9 @@ object Tables {
       // overflows fail loudly even under cluster-level config drift.
       .config("spark.sql.ansi.enabled", "true")
       .getOrCreate()
+    // ERROR, not WARN: benign per-query WARNs (e.g. AQE notices) multiplied
+    // by hundreds of queries can alone overflow a driver's output tail.
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 }

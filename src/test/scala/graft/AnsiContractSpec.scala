@@ -48,4 +48,18 @@ class AnsiContractSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"session builders missing explicit ansi.enabled pin: $offenders")
   }
+
+  test("Tables.localSession is the only session builder in main code") {
+    // One factory, so the session settings cannot drift between mains.
+    val root = java.nio.file.Paths.get("src/main/scala")
+    import scala.jdk.CollectionConverters._
+    val builders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p))
+        .contains("SparkSession.builder"))
+      .map(p => root.relativize(p).toString)
+      .toList
+    assert(builders == List("graft/Tables.scala"),
+      s"SparkSession.builder outside Tables.localSession: $builders")
+  }
 }

@@ -113,6 +113,14 @@ class BenchLineSpec extends AnyFunSuite {
       .contains("\"artifact_sec\":{}"))
   }
 
+  test("a failed query is counted on the line, which still fits at n = 300") {
+    val line = Bench.finalLine(fakeResults(300), ingest, "sf",
+      fakeSentinel(300), failed = 1)
+    assert(line.contains("\"failed\":1,"), line)
+    assert(line.length <= Bench.TailBudget, s"line is ${line.length}B")
+    assert(Bench.finalLine(fakeResults(3), ingest, "sf").contains("\"failed\":0,"))
+  }
+
   test("number rendering is 3-decimal, dot-separated, never scientific") {
     assert(Bench.f3(0.0001) == "0.000")
     assert(Bench.f3(1234567.891234) == "1234567.891")

@@ -5,25 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM under sbt's forked test run). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // ANSI is the Spark 4 default; pinned so the repo's numeric-budget
-    // overflows fail loudly even under cluster-level config drift.
-    .config("spark.sql.ansi.enabled", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Tables.localSession(cores = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkSpec.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
