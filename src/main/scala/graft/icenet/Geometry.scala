@@ -1,6 +1,6 @@
 package graft.icenet
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Grid-cell geometry construction — the Spark-first re-expression of the
@@ -14,17 +14,6 @@ import org.apache.spark.sql.functions._
   * pure-Scala LAEA inverse ([[Laea]]) for the EPSG:4326 ring (F4).
   */
 object Geometry {
-
-  /** Half of the mean step between sorted distinct axis values — the
-    * reference's `mean_step_size/2` (utils.py:47-48, processor.py:218-219),
-    * i.e. (max-min)/(n-1)/2, computed as a scalar aggregate.
-    */
-  def halfStep(axis: DataFrame, colName: String): Double = {
-    val row = axis.agg(
-      ((max(col(colName)) - min(col(colName))) /
-        (countDistinct(col(colName)) - 1) / 2.0).as("half")).head()
-    row.getDouble(0)
-  }
 
   /** WKT 5-point closed rectangle ring around an integer centroid (F1;
     * reference processor.py:225-236). Pure `format_string` — stays inside
@@ -51,48 +40,91 @@ object Geometry {
   /** Axis-length bound for [[buildCells]]: the EASE-Grid 2.0 axes are O(500)
     * values by contract (25 km pitch over a hemisphere, SURVEY §1.1); 16384
     * is ~30x headroom. Anything bigger is a mis-wired input (a fact table
-    * where an axis belongs), and the unpartitioned id window below would
-    * single-task it — fail loudly instead, pointing at the scalable path.
+    * where an axis belongs), and the unpartitioned id window in [[cellsOf]]
+    * would single-task it — fail loudly instead, pointing at the scalable
+    * path.
     */
   val MaxAxisLen: Long = 16384L
 
-  /** Build the cell dimension table from the two centroid axes: cross join
-    * (J3, processor.py:223-226) + WKT rings + deterministic surrogate key.
-    *
-    * The reference's `cell_id SERIAL` assigns ids in arrival order; we order
-    * by the natural key `(centroid_x, centroid_y)` so ids are reproducible.
-    * Axes are size-guarded to [[MaxAxisLen]] (the half-step aggregate
-    * doubles as the counter — no extra job), so the single-partition window
-    * for id assignment is bounded by construction; the result is broadcast
-    * downstream anyway. A data-sized keyed table needs
-    * [[graft.operators.GlobalRowNumber]] instead.
+  /** One centroid axis as the cell builder needs it: `half` is half of the
+    * mean step between sorted distinct values — the reference's
+    * `mean_step_size/2` (utils.py:47-48, processor.py:218-219), i.e.
+    * (max-min)/(n-1)/2 — and `n` is the distinct count [[MaxAxisLen]]
+    * bounds.
     */
-  def buildCells(xAxis: DataFrame, yAxis: DataFrame, north: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def halfAndCount(axis: DataFrame, c: String): (Double, Long) = {
-      val row = axis.agg(
-        ((max(col(c)) - min(col(c))) / (countDistinct(col(c)) - 1) / 2.0).as("half"),
-        countDistinct(col(c)).as("n")).head()
-      (row.getDouble(0), row.getLong(1))
+  final case class Axis(half: Double, n: Long)
+
+  /** The distinct values of both centroid axes as `(is_x, v)` rows in one
+    * partition: one exchange for both axes, however many rows feed them,
+    * and no further exchange for [[axes]]' aggregate.
+    */
+  def axisValues(xAxis: DataFrame, yAxis: DataFrame): DataFrame =
+    xAxis.select(lit(true).as("is_x"), col("centroid_x").as("v"))
+      .union(yAxis.select(lit(false).as("is_x"), col("centroid_y").as("v")))
+      .distinct().coalesce(1)
+
+  /** Both axes from ONE scalar aggregate over [[axisValues]], failing on
+    * axes longer than [[MaxAxisLen]] before anything is cross-joined.
+    */
+  def axes(values: DataFrame): (Axis, Axis) = {
+    def stats(isX: Boolean) = {
+      val v = when(col("is_x") === isX, col("v"))
+      Seq((max(v) - min(v)) / (count(v) - 1) / 2.0, count(v))
     }
-    val (halfX, nx) = halfAndCount(xAxis, "centroid_x")
-    val (halfY, ny) = halfAndCount(yAxis, "centroid_y")
-    require(nx <= MaxAxisLen && ny <= MaxAxisLen,
-      s"buildCells axes have $nx x $ny distinct centroids; the contract is " +
+    val aggs = stats(isX = true) ++ stats(isX = false)
+    val r = values.agg(aggs.head, aggs.tail: _*).head()
+    val (x, y) = (Axis(r.getDouble(0), r.getLong(1)), Axis(r.getDouble(2), r.getLong(3)))
+    require(x.n <= MaxAxisLen && y.n <= MaxAxisLen,
+      s"buildCells axes have ${x.n} x ${y.n} distinct centroids; the contract is " +
         s"O(500) grid axes (max $MaxAxisLen). A data-sized table would " +
         "single-task the cell_id window — use GlobalRowNumber for scalable ids.")
-    val hx = lit(math.round(halfX))
-    val hy = lit(math.round(halfY))
+    (x, y)
+  }
+
+  /** Every centroid pair of the grid: distinct x by distinct y (J3,
+    * processor.py:223-226), from [[axisValues]].
+    */
+  def pairs(values: DataFrame): DataFrame =
+    values.filter(col("is_x")).select(col("v").as("centroid_x"))
+      .crossJoin(values.filter(!col("is_x")).select(col("v").as("centroid_y")))
+
+  /** Cell rows for the centroid `pairs` (WKT rings + surrogate key), with
+    * ring half-widths from the grid's axes. Ids continue a table whose
+    * largest id is `maxId`: `maxId + row_number()` over the natural key
+    * `(centroid_x, centroid_y)`, so existing cells keep theirs and new ones
+    * never collide with them (the reference's `cell_id SERIAL PK`). The
+    * window is one partition; callers bound `pairs` by the axis guard.
+    */
+  def cellsOf(pairs: DataFrame, x: Axis, y: Axis, north: Boolean, maxId: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val hx = lit(math.round(x.half))
+    val hy = lit(math.round(y.half))
     val geomCol = if (north) "geom_6931" else "geom_6932"
-    val cells = xAxis.crossJoin(yAxis)
-    cells
+    pairs
       .withColumn(geomCol,
         wktCellPolygon(col("centroid_x"), col("centroid_y"), hx, hy))
       .withColumn("geom_4326",
         wkt4326(north)(col("centroid_x").cast("long"),
           col("centroid_y").cast("long"), hx.cast("long"), hy.cast("long")))
-      .withColumn("cell_id",
+      .withColumn("cell_id", lit(maxId) +
         row_number().over(Window.orderBy("centroid_x", "centroid_y")).cast("long"))
       .select("cell_id", "centroid_x", "centroid_y", geomCol, "geom_4326")
+  }
+
+  /** Build the cell dimension table from the two centroid axes: cross join
+    * (J3, processor.py:223-226) + WKT rings + deterministic surrogate key.
+    *
+    * The reference's `cell_id SERIAL` assigns ids in arrival order; we order
+    * by the natural key `(centroid_x, centroid_y)` so ids are reproducible:
+    * 1..N for a fresh grid ([[cellsOf]] with `maxId = 0`). Axes are
+    * size-guarded to [[MaxAxisLen]] before the cross join, so the
+    * single-partition window for id assignment is bounded by construction;
+    * the result is broadcast downstream anyway. A data-sized keyed table
+    * needs [[graft.operators.GlobalRowNumber]] instead.
+    */
+  def buildCells(xAxis: DataFrame, yAxis: DataFrame, north: Boolean): DataFrame = {
+    val values = axisValues(xAxis, yAxis)
+    val (x, y) = axes(values)
+    cellsOf(pairs(values), x, y, north, maxId = 0L)
   }
 }

@@ -1,7 +1,6 @@
 package graft.icenet
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end IceNet ingest pipeline — the Spark re-expression of the
@@ -28,7 +27,9 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     * refresh uses [[updateLatestIncremental]] (provably equal to the full
     * recompute, PipelineSpec) so a one-date ingest touches one date's
     * partitions end to end; [[updateLatest]] remains the full-recompute
-    * escape hatch (e.g. after a manual fact-table repair).
+    * escape hatch (e.g. after a manual fact-table repair). A drop on an
+    * already-known grid writes nothing to the cell table, and new cells
+    * continue the existing ids ([[updateGeometries]]).
     */
   def ingest(raw: DataFrame): Unit = {
     val loaded = Ingest.load(raw).cache()
@@ -43,12 +44,31 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
   /** Stage 2 (processor.py:192-266): distinct centroid axes -> cross join ->
     * WKT rings -> first-write-wins insert keyed on the centroid pair
     * (the reference's UNIQUE(centroid_x, centroid_y), processor.py:206).
+    *
+    * The grid rarely changes, so the stage works on what is new: one
+    * aggregate sizes and guards both axes ([[Geometry.axes]]), the
+    * cross-joined pairs are anti-joined against the cell table's two key
+    * columns, and a drop on a known grid ends there with no write. Only new
+    * pairs get rings, with half-steps from this file's full axes, and ids
+    * `max(cell_id) + row_number()` in `(centroid_x, centroid_y)` order — so
+    * existing cells keep their ids, an extension never reuses one, and a
+    * first ingest (max 0) numbers 1..N. Everything runs under the cell
+    * table's writer lock ([[TableOps.appendWith]]).
     */
   def updateGeometries(loaded: DataFrame): Unit = {
-    val xs = loaded.select(col("xc_m").as("centroid_x")).distinct()
-    val ys = loaded.select(col("yc_m").as("centroid_y")).distinct()
-    val cells = Geometry.buildCells(xs, ys, hemi.north)
-    TableOps.insertIgnore(spark, cellPath, cells, Seq("centroid_x", "centroid_y"))
+    val keys = Seq("centroid_x", "centroid_y")
+    val values = Geometry.axisValues(
+      loaded.select(col("xc_m").as("centroid_x")),
+      loaded.select(col("yc_m").as("centroid_y"))).cache()
+    try TableOps.appendWith(spark, cellPath) { table =>
+      val (x, y) = Geometry.axes(values)
+      val pairs = Geometry.pairs(values)
+      val fresh = table.fold(pairs)(t =>
+        pairs.join(t.select(keys.map(col): _*), keys, "left_anti"))
+      if (fresh.isEmpty) None
+      else Some(Geometry.cellsOf(fresh, x, y, hemi.north, maxId = table.fold(0L)(
+        _.agg(coalesce(max("cell_id"), lit(0L))).head().getLong(0))))
+    } finally values.unpersist()
   }
 
   /** Stage 3 (processor.py:268-344): resolve cell_id by left equi-join on the
@@ -116,16 +136,24 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     * enough that a single-partition sort per ingest is the write path's
     * bottleneck, and it warned on every bench run. Ids are identical
     * ((date_forecast_for, cell_id) is unique per view).
+    *
+    * Dedup and numbering run on NARROW rows (facts semi-joined to the cell
+    * ids, no geometry); the wide `geom_4326` ring is broadcast-joined once
+    * afterwards. Because `cell_id` is unique in the cell table, this is
+    * row-identical to joining first (PipelineSpec's oracle case).
     */
   private def viewOf(facts: DataFrame): DataFrame = {
     val cells = TableOps.read(spark, cellPath).select("cell_id", "geom_4326")
+    val factCols = Seq("date_forecast_generated", "date_forecast_for", "cell_id",
+      "sea_ice_concentration_mean", "sea_ice_concentration_stddev")
     graft.operators.GlobalRowNumber.withGlobalRowNumber(
       facts
-        .join(broadcast(cells), Seq("cell_id"))
-        .select("date_forecast_generated", "date_forecast_for", "cell_id",
-          "sea_ice_concentration_mean", "sea_ice_concentration_stddev", "geom_4326")
+        .join(cells.select("cell_id"), Seq("cell_id"), "left_semi")
+        .select(factCols.map(col): _*)
         .distinct(),
       "forecast_id", Seq(col("date_forecast_for"), col("cell_id")))
+      .join(broadcast(cells), Seq("cell_id"))
+      .select((factCols :+ "geom_4326" :+ "forecast_id").map(col): _*)
   }
 
   def updateLatest(): Unit =

@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   *
   *  - S5 `INSERT ... ON CONFLICT DO NOTHING` (processor.py:249-257, 326-334)
   *    -> [[insertIgnore]]: left-anti join of incoming vs existing keys, then
-  *    append. First write wins, re-ingest converges.
+  *    append. First write wins, re-ingest converges. [[appendWith]] is the
+  *    same locked append for rows the caller derives from the table itself
+  *    (the cell table's continuing ids), and it skips the write when
+  *    nothing is new.
   *  - S6 `INSERT ... SELECT ... ON CONFLICT DO UPDATE` (processor.py:375-403)
   *    -> [[upsert]]: union-by-key with incoming precedence (last write wins).
   *  - S7 `REFRESH MATERIALIZED VIEW` (processor.py:444-448) ->
@@ -173,24 +176,49 @@ object TableOps {
     withTableLock(spark, path) {
       heal(spark, path)
       val deduped = incoming.dropDuplicates(keys)
-      if (!exists(spark, path)) {
-        write(deduped, path, "overwrite", partitionCols)
-      } else if (allowSchemaEvolution &&
-          read(spark, path).columns.sorted.toSeq != deduped.columns.sorted.toSeq) {
-        val (existingU, incomingU) = unionSchemas(read(spark, path), deduped, path)
-        val fresh = incomingU.join(
-          existingU.select(keys.map(col): _*), keys, "left_anti")
-        replace(spark, path, existingU.unionByName(fresh), partitionCols)
-      } else {
-        val existing = read(spark, path)
-        requireSameColumns(existing, deduped, path)
-        val fresh = freshRows(spark, path, deduped, keys, partitionCols)
-        // normalize to the TABLE's column order so every appended file shares
-        // one field layout
-        write(fresh.select(existing.columns.map(col).toIndexedSeq: _*),
-          path, "append", partitionCols)
+      existing(spark, path) match {
+        case None => write(deduped, path, "overwrite", partitionCols)
+        case Some(table) if allowSchemaEvolution &&
+            table.columns.sorted.toSeq != deduped.columns.sorted.toSeq =>
+          val (existingU, incomingU) = unionSchemas(table, deduped, path)
+          val fresh = incomingU.join(
+            existingU.select(keys.map(col): _*), keys, "left_anti")
+          replace(spark, path, existingU.unionByName(fresh), partitionCols)
+        case Some(table) =>
+          requireSameColumns(table, deduped, path)
+          append(table, freshIn(table, deduped, keys, partitionCols), path, partitionCols)
       }
     }
+
+  /** Append whose new rows depend on more of the table than a key
+    * anti-join can see — e.g. surrogate ids that continue from the table's
+    * largest id. Under the writer lock and after [[heal]], `rowsFor` gets
+    * the table as it stands (`None` before its first write) and returns
+    * the rows to add, or `None` to leave the table untouched: no write, no
+    * empty part file. The rows must carry the table's column set.
+    */
+  def appendWith(spark: SparkSession, path: String)(
+      rowsFor: Option[DataFrame] => Option[DataFrame]): Unit =
+    withTableLock(spark, path) {
+      heal(spark, path)
+      val table = existing(spark, path)
+      rowsFor(table).foreach { rows =>
+        table match {
+          case None => write(rows, path, "overwrite", Nil)
+          case Some(t) => requireSameColumns(t, rows, path); append(t, rows, path, Nil)
+        }
+      }
+    }
+
+  private def existing(spark: SparkSession, path: String): Option[DataFrame] =
+    if (exists(spark, path)) Some(read(spark, path)) else None
+
+  /** Appends `rows` in the TABLE's column order, so every appended file
+    * shares one field layout.
+    */
+  private def append(
+      table: DataFrame, rows: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    write(rows.select(table.columns.map(col).toIndexedSeq: _*), path, "append", partitionCols)
 
   /** Additive schema union for [[insertIgnore]]/[[upsert]] evolution: both
     * frames projected to existing-columns ++ incoming-only-columns, with
@@ -242,9 +270,15 @@ object TableOps {
     */
   def freshRows(
       spark: SparkSession, path: String, deduped: DataFrame,
-      keys: Seq[String], partitionCols: Seq[String] = Nil): DataFrame = {
+      keys: Seq[String], partitionCols: Seq[String] = Nil): DataFrame =
+    freshIn(read(spark, path), deduped, keys, partitionCols)
+
+  /** [[freshRows]] against an already-read `table`. */
+  private def freshIn(
+      table: DataFrame, deduped: DataFrame,
+      keys: Seq[String], partitionCols: Seq[String]): DataFrame = {
     requirePartitionColsInKeys(partitionCols, keys)
-    val pruned = pruneToPartitions(read(spark, path), deduped, partitionCols)
+    val pruned = pruneToPartitions(table, deduped, partitionCols)
     deduped.join(pruned.select(keys.map(col): _*), keys, "left_anti")
   }
 

@@ -26,6 +26,31 @@ class PipelineSpec extends SparkSpec {
     rows.toDF("time", "leadtime", "xc", "yc", "lat", "lon", "sic_mean", "sic_stddev")
   }
 
+  /** Long-form raw file over the grid `xis` x `yis` (25 km pitch), every
+    * cell wet, 2 leadtimes.
+    */
+  private def rawGrid(gen: String, xis: Seq[Int], yis: Seq[Int]): DataFrame = {
+    val t = Timestamp.valueOf(s"$gen 00:00:00")
+    val rows = for (xi <- xis; yi <- yis; lt <- 1 to 2)
+      yield (t, lt, xi * 25.0, yi * 25.0, 80.0 + xi, 10.0 * yi,
+        0.1 + 0.01 * xi + 0.001 * yi, 0.01)
+    rows.toDF("time", "leadtime", "xc", "yc", "lat", "lon", "sic_mean", "sic_stddev")
+  }
+
+  /** (centroid_x, centroid_y) -> cell_id of the cell table. */
+  private def cellIds(p: Pipeline): Map[(Int, Int), Long] =
+    TableOps.read(spark, p.cellPath).select("centroid_x", "centroid_y", "cell_id")
+      .as[(Int, Int, Long)].collect().map { case (x, y, id) => (x, y) -> id }.toMap
+
+  /** File name -> size of every file below `path`. */
+  private def filesUnder(path: String): Map[String, Long] = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path)
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => f.getPath.toString -> f.getLen).toMap
+  }
+
   private def freshPipeline(): Pipeline =
     new Pipeline(spark, tmpDir("wh"), North)
 
@@ -222,5 +247,71 @@ class PipelineSpec extends SparkSpec {
         assert(lat > 80) // 25-75 km from the pole -> very high latitude
       }
     }
+  }
+
+  test("grid extension: new cells get new ids, existing cells keep theirs") {
+    val p = freshPipeline()
+    p.ingest(rawGrid("2020-06-01", Seq(2, 3), Seq(1, 2, 3)))
+    val before = cellIds(p)
+    assert(before.values.toSeq.sorted == (1L to 6L))
+    // the new column x = 25 km sorts before every existing cell
+    p.ingest(rawGrid("2020-06-08", Seq(1, 2, 3), Seq(1, 2, 3)))
+    val after = cellIds(p)
+    assert(after.size == 9)
+    assert(after.values.toSet.size == 9, s"duplicate cell_id: $after")
+    assert(before.forall { case (k, id) => after(k) == id }, "an existing cell changed id")
+    assert(after.filter(_._1._1 == 25000).values.toSeq.sorted == Seq(7L, 8L, 9L))
+    val view = TableOps.read(spark, p.latestPath)
+    assert(view.count() == 18) // 9 wet cells x 2 leadtimes
+    assert(view.select("date_forecast_for", "cell_id").distinct().count() == 18)
+  }
+
+  test("a known-grid drop leaves the cell table's files untouched") {
+    val p = freshPipeline()
+    p.ingest(rawFile("2020-06-01", 0.0))
+    val files = filesUnder(p.cellPath)
+    p.ingest(rawFile("2020-06-08", 0.1))
+    p.ingest(rawFile("2020-06-01", 0.0))
+    assert(filesUnder(p.cellPath) == files)
+    // the axis guard still runs on every drop, before any cross join
+    val wide = spark.range(Geometry.MaxAxisLen + 1)
+      .select((col("id") * 25000).cast("int").as("xc_m"),
+        ((col("id") % 2) * 25000).cast("int").as("yc_m"))
+    val e = intercept[IllegalArgumentException](p.updateGeometries(wide))
+    assert(e.getMessage.contains("GlobalRowNumber"))
+    assert(filesUnder(p.cellPath) == files)
+  }
+
+  test("narrow numbering equals numbering the geometry-joined rows") {
+    val p = freshPipeline()
+    // the join-first formulation: join cells, dedup the wide rows, number
+    def oracle(): Seq[org.apache.spark.sql.Row] = {
+      val facts = TableOps.read(spark, p.forecastPath)
+      val maxd = facts.agg(max("date_forecast_generated")).head().getDate(0)
+      val cells = TableOps.read(spark, p.cellPath).select("cell_id", "geom_4326")
+      graft.operators.GlobalRowNumber.withGlobalRowNumber(
+        facts.filter(col("date_forecast_generated") === lit(maxd))
+          .join(cells, Seq("cell_id"))
+          .select("date_forecast_generated", "date_forecast_for", "cell_id",
+            "sea_ice_concentration_mean", "sea_ice_concentration_stddev", "geom_4326")
+          .distinct(),
+        "forecast_id", Seq(col("date_forecast_for"), col("cell_id")))
+        .orderBy("forecast_id").collect().toSeq
+    }
+    def viewEqualsOracle(): Unit = {
+      val view = p.latestView()
+      assert(view.columns.toSeq == Seq("date_forecast_generated", "date_forecast_for",
+        "cell_id", "sea_ice_concentration_mean", "sea_ice_concentration_stddev",
+        "geom_4326", "forecast_id"))
+      val got = view.orderBy("forecast_id").collect().toSeq
+      assert(got.nonEmpty && got == oracle())
+    }
+    p.ingest(rawFile("2020-06-01", 0.0))
+    p.ingest(rawFile("2020-06-08", 0.1)) // new date
+    viewEqualsOracle()
+    p.ingest(rawFile("2020-06-04", 0.2)) // older date
+    viewEqualsOracle()
+    p.ingest(rawGrid("2020-06-15", Seq(0, 1, 2, 3), Seq(1, 2, 3))) // grid extension
+    viewEqualsOracle()
   }
 }

@@ -81,6 +81,29 @@ class TableOpsSpec extends SparkSpec {
       Set((java.sql.Date.valueOf("2020-01-02"), 9)))
   }
 
+  test("appendWith: None writes nothing, rows append in the table's column order") {
+    import org.apache.hadoop.fs.Path
+    val path = tmpDir("appendWith") + "/t"
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files = fs.listStatus(new Path(path)).map(f => f.getPath.getName -> f.getLen).toSet
+    TableOps.appendWith(spark, path) { t =>
+      assert(t.isEmpty)
+      Some(Seq((1, "a")).toDF("k", "v"))
+    }
+    val first = files
+    TableOps.appendWith(spark, path) { t =>
+      assert(t.map(_.count()).contains(1L))
+      None
+    }
+    assert(files == first)
+    TableOps.appendWith(spark, path)(_ => Some(Seq(("b", 2)).toDF("v", "k")))
+    assert(TableOps.read(spark, path).as[(Int, String)].collect().toSet ==
+      Set((1, "a"), (2, "b")))
+    intercept[IllegalArgumentException] {
+      TableOps.appendWith(spark, path)(_ => Some(Seq((3, "c", 1.0)).toDF("k", "v", "x")))
+    }
+  }
+
   /** Crash-safety of the replace swap: simulate a kill at each window of
     * the sequence (write .staging -> rename cur->.old -> rename .staging->cur
     * -> delete .old) and assert a reader still sees ONE complete committed
