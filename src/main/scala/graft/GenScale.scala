@@ -35,7 +35,7 @@ object GenScale {
     val spark = Tables.localSession()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
+    def read(name: String) = Tables.parquet(spark, s"$src/$name.parquet")
     def stride(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1L
 

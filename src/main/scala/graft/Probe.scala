@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.graftbridge.ListenerBusBridge.drainListenerBus
 
 /** Dev probe for single queries and the write path (not part of the driver
   * contract), run under the bench session ([[Tables.localSession]]):
@@ -103,7 +104,7 @@ object Probe {
     // drain BEFORE removing: the listener bus is async, so events still
     // queued at removal would never be delivered and the profile would
     // under-report the run's final stages
-    Thread.sleep(500)
+    drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
     out(s"STAGES ${q._1} wall=${show(t)}")
     out("stage  runMs   cpuMs    gcMs  fetchW tasks   shufR   shufW  scopes")

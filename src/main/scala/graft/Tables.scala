@@ -1,17 +1,73 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
-/** Loaders for the driver-generated parquet fixtures (see TESTDATA.md).
+/** Loaders for the driver-generated parquet fixtures (see TESTDATA.md), and
+  * the one parquet reader of the repo ([[parquet]]).
   *
   * Every query in [[SparkEntry.queries]] receives a scale-factor directory and
   * reads tables through here, so projection/predicate pushdown reaches the
   * parquet scan uniformly. At cluster scale these would be catalog tables
-  * (`spark.read.table`); the URI is the only thing that changes.
+  * (`spark.read.table`), whose schema comes from the catalog; [[parquet]]
+  * gets the same effect from one footer read on the driver, so no table
+  * read costs a Spark job.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without the schema-inference job. Spark
+    * infers a parquet schema by launching a one-task job that reads one
+    * footer, even with `mergeSchema` off. Here the driver reads the footer
+    * of the first data file under `path` itself, converts it with the calls
+    * that task makes (`ParquetFileFormat.readSchemaFromFooter` and a
+    * [[ParquetToSparkSchemaConverter]] over the session conf), and passes
+    * the result as the read's data schema. Partition columns are still
+    * discovered from the directory names (below `basePath` when given), so
+    * column order and types come out as with inference.
+    *
+    * There is no cache: every read reads the current footer, so a rewritten
+    * table never shows a stale schema. A path with no data file falls
+    * through to `spark.read.parquet`, which fails as it always has.
+    */
+  def parquet(
+      spark: SparkSession, path: String, basePath: Option[String] = None): DataFrame = {
+    val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.newHadoopConf()
+    val p = new Path(path)
+    firstDataFile(p.getFileSystem(conf), p) match {
+      case None => reader.parquet(path)
+      case Some(file) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file, footer),
+          new ParquetToSparkSchemaConverter(session.sessionState.conf))
+        reader.schema(schema).parquet(path)
+    }
+  }
+
+  /** The first data file at or below `root`: names in sorted order, hidden
+    * names (`_SUCCESS`, `.crc` files, `_commit` markers) skipped, partition
+    * directories descended into. `None` when there is none, or no `root`.
+    * Stops at the first hit, so it never walks a large table.
+    */
+  private[graft] def firstDataFile(fs: FileSystem, root: Path): Option[Path] = {
+    def visible(s: FileStatus) =
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+    def first(s: FileStatus): Option[Path] =
+      if (s.isFile) Some(s.getPath)
+      else fs.listStatus(s.getPath).filter(visible).sortBy(_.getPath.getName)
+        .iterator.flatMap(first).nextOption()
+    if (fs.exists(root)) first(fs.getFileStatus(root)) else None
+  }
 
   /** `events.parquet` has stored `ts` as parquet TIMESTAMP(NANOS) in some
     * fixture generations (which Spark 4 rejects unless read as a raw long)

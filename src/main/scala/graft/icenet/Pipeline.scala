@@ -96,7 +96,10 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
       col("sea_ice_concentration_mean"), col("sea_ice_concentration_stddev"))
     val bad = facts.filter(col("cell_id").isNull)
     val nBad = bad.count()
-    if (nBad > 0) bad.write.mode("append").parquet(quarantinePath)
+    // first-write-wins like the facts, so a re-delivered file quarantines
+    // its rows once
+    if (nBad > 0) TableOps.insertIgnore(spark, quarantinePath, bad,
+      Seq("date_forecast_generated", "date_forecast_for", "xc_m", "yc_m"))
     TableOps.insertIgnore(spark, forecastPath,
       facts.filter(col("cell_id").isNotNull).drop("xc_m", "yc_m"),
       Seq("date_forecast_generated", "date_forecast_for", "cell_id"),
@@ -163,14 +166,17 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     * `REFRESH MATERIALIZED VIEW` recomputes the view from ALL facts on
     * every ingest (processor.py:444-448), which at 100 TB re-reads years
     * of partitions to re-derive one date. The view only ever shows the
-    * max generation date, so its next state is decidable from two bounded
-    * scalars (incoming date, current view date):
+    * max generation date, so its next state is decidable from bounded
+    * scalars (incoming date, fact table's max date, current view date):
     *
-    *  - incoming >= current: the view's next content is exactly the
+    *  - incoming == facts' max: the view's next content is exactly the
     *    incoming date's facts — rebuild from THAT one partition
-    *    (partition-pruned scan), identical result to the full recompute.
-    *  - incoming < current (a late replay): the view is already correct;
-    *    nothing runs at all.
+    *    (partition-pruned scan of the same fact-table read that gave the
+    *    max), identical result to the full recompute. The view's date is
+    *    not read on this path.
+    *  - otherwise (a late replay): the view is already correct when it
+    *    shows facts' max, and nothing runs; a stale or absent view is
+    *    recomputed in full.
     *
     * PipelineSpec asserts equality with [[latestView]]'s full recompute
     * after new-date, same-date and older-date ingests.
@@ -187,27 +193,25 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     // for a crash that landed between updateForecasts and the view refresh,
     // and an empty drop must still detect facts-ahead-of-view and repair it
     // (it falls through to the stale-view branch below).
-    val factsMax = TableOps.read(spark, forecastPath)
-      .agg(max("date_forecast_generated")).head().getDate(0)
+    val facts = TableOps.read(spark, forecastPath)
+    val factsMax = facts.agg(max("date_forecast_generated")).head().getDate(0)
     if (factsMax == null) return // fact table exists but is empty: no view state
-    val current =
-      if (TableOps.exists(spark, latestPath))
-        Option(TableOps.read(spark, latestPath)
-          .agg(max("date_forecast_generated")).head().getDate(0))
-      else None
     if (incoming != null && incoming == factsMax) {
       // this ingest IS the newest date: the view's next content is exactly
       // that date's facts — rebuild from the one partition-pruned date
       TableOps.overwriteView(spark, latestPath,
-        viewOf(TableOps.read(spark, forecastPath)
-          .filter(col("date_forecast_generated") === lit(incoming))))
-    } else if (!current.contains(factsMax)) {
-      // view is stale or absent (crash recovery, manual repair) and this
-      // ingest is not the max date: only the full recompute is correct
-      updateLatest()
+        viewOf(facts.filter(col("date_forecast_generated") === lit(incoming))))
+    } else {
+      // only now is the view's own date needed. A view that already shows
+      // the max date needs nothing (the late-replay fast path); a stale or
+      // absent one (crash recovery, manual repair) needs the full recompute
+      val current =
+        if (TableOps.exists(spark, latestPath))
+          Option(TableOps.read(spark, latestPath)
+            .agg(max("date_forecast_generated")).head().getDate(0))
+        else None
+      if (!current.contains(factsMax)) updateLatest()
     }
-    // else: view already shows the max date and this ingest was older —
-    // nothing to refresh (the late-replay fast path)
   }
 
   /** Registers the warehouse tables and the latest view in the session

@@ -2,6 +2,7 @@ package graft.icenet
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 
 /** Snapshot versioning with time travel — the lakehouse capability the
   * in-place [[TableOps]] swap protocol deliberately trades away (its
@@ -135,7 +136,7 @@ object Snapshots {
       throw new IllegalStateException(s"$path has no committed snapshot")))
     require(isCommitted(hfs, path, v),
       s"$path has no committed version $v (uncommitted, expired, or never written)")
-    spark.read.parquet(versionDir(path, v).toString)
+    Tables.parquet(spark, versionDir(path, v).toString)
   }
 
   /** Time travel by wall clock: the latest snapshot committed at or before

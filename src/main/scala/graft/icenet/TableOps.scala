@@ -3,6 +3,7 @@ package graft.icenet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Keyed-table write semantics over parquet directories — the Spark
   * re-expression of the reference's PostgreSQL write path:
@@ -119,6 +120,10 @@ object TableOps {
     * current partition dir is missing is the last committed version of that
     * partition and is read alongside the table (read-only: [[heal]], which
     * physically promotes it, only runs under the writer lock).
+    *
+    * Every frame here comes from [[graft.Tables.parquet]], which takes the
+    * schema from one footer on the driver: building a read launches no
+    * Spark job, the root and each parked leaf alike.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val root = resolve(spark, path)
@@ -128,31 +133,16 @@ object TableOps {
       case (leaf, rel) if !fs.exists(new Path(new Path(root), rel)) => leaf
     }
     def parked(df: Option[DataFrame], leaves: Seq[Path]): DataFrame =
-      leaves.map(l =>
-          spark.read.option("basePath", oldparts.toString).parquet(l.toString))
+      leaves.map(l => Tables.parquet(spark, l.toString, Some(oldparts.toString)))
         .foldLeft(df)((acc, d) => Some(acc.fold(d)(_.unionByName(d)))).get
     // A crash between [[replacePartitions]]' park rename and staging rename
     // on a table whose ONLY partition was being swapped leaves the root with
     // no data files at all (just _SUCCESS and empty partition skeletons) —
-    // spark.read.parquet(root) would fail schema inference even though the
+    // reading the root would fail for want of a schema even though the
     // parked leaves hold a complete committed version. Read those alone.
-    if (orphans.nonEmpty && !hasDataFiles(fs, new Path(root))) parked(None, orphans)
-    else parked(Some(spark.read.parquet(root)), orphans)
-  }
-
-  /** True iff `root` contains at least one non-hidden data file anywhere
-    * below it (`_SUCCESS`/`.crc` markers don't count). Short-circuits on the
-    * first hit, so on a healthy table this is one or two list calls — it
-    * never walks a large table.
-    */
-  private def hasDataFiles(fs: FileSystem, root: Path): Boolean = {
-    def isData(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    def walk(p: Path): Boolean = {
-      val entries = fs.listStatus(p)
-      entries.exists(e => e.isFile && isData(e.getPath)) ||
-        entries.exists(e => e.isDirectory && walk(e.getPath))
-    }
-    fs.exists(root) && walk(root)
+    if (orphans.nonEmpty && Tables.firstDataFile(fs, new Path(root)).isEmpty)
+      parked(None, orphans)
+    else parked(Some(Tables.parquet(spark, root)), orphans)
   }
 
   /** S5: idempotent first-write-wins append. Rows whose key already exists

@@ -205,6 +205,22 @@ class PipelineSpec extends SparkSpec {
     assert(facts.filter(col("date_forecast_generated") === "2020-06-02").count() == 1)
   }
 
+  test("FK audit: re-applying a rogue batch quarantines its rows once") {
+    val p = freshPipeline()
+    p.ingest(rawFile("2020-06-01", 0.0))
+    val rogue = Seq(
+      (Timestamp.valueOf("2020-06-02 00:00:00"), 1, 225.0, 25.0, 85.0, 10.0,
+        Some(0.4), Some(0.04)),
+      (Timestamp.valueOf("2020-06-02 00:00:00"), 1, 25.0, 25.0, 85.0, 10.0,
+        Some(0.5), Some(0.05)))
+      .toDF("time", "leadtime", "xc", "yc", "lat", "lon", "sic_mean", "sic_stddev")
+    assert(p.updateForecasts(Ingest.load(rogue)) == 1)
+    assert(p.updateForecasts(Ingest.load(rogue)) == 1) // a re-delivery
+    assert(TableOps.read(spark, p.quarantinePath).count() == 1)
+    assert(TableOps.read(spark, p.forecastPath)
+      .filter(col("date_forecast_generated") === "2020-06-02").count() == 1)
+  }
+
   test("SQL surface: registered catalog views match the Scala read path") {
     val p = freshPipeline()
     p.ingest(rawFile("2020-06-01", 0.0))
