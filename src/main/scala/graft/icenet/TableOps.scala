@@ -149,31 +149,15 @@ object TableOps {
     * in the table are silently dropped (the PG unique-index arbitration).
     * Incoming duplicates are also collapsed to one row per key — same net
     * effect as the reference's row-at-a-time conflict handling.
-    *
-    * `allowSchemaEvolution = true` opts into ADDITIVE schema evolution
-    * (the Delta `mergeSchema` semantic): columns present on only one side
-    * are added to the union schema and null-filled on the other; a common
-    * column whose type differs still fails. An evolving write rewrites the
-    * table through the crash-safe swap (appending wider files would hide
-    * the new column from readers without mergeSchema) — the cost profile
-    * of ALTER TABLE ADD COLUMN + backfill, paid only when the schema
-    * actually changes. Default remains fail-fast rejection.
     */
   def insertIgnore(
       spark: SparkSession, path: String, incoming: DataFrame,
-      keys: Seq[String], partitionCols: Seq[String] = Nil,
-      allowSchemaEvolution: Boolean = false): Unit =
+      keys: Seq[String], partitionCols: Seq[String] = Nil): Unit =
     withTableLock(spark, path) {
       heal(spark, path)
       val deduped = incoming.dropDuplicates(keys)
       existing(spark, path) match {
         case None => write(deduped, path, "overwrite", partitionCols)
-        case Some(table) if allowSchemaEvolution &&
-            table.columns.sorted.toSeq != deduped.columns.sorted.toSeq =>
-          val (existingU, incomingU) = unionSchemas(table, deduped, path)
-          val fresh = incomingU.join(
-            existingU.select(keys.map(col): _*), keys, "left_anti")
-          replace(spark, path, existingU.unionByName(fresh), partitionCols)
         case Some(table) =>
           requireSameColumns(table, deduped, path)
           append(table, freshIn(table, deduped, keys, partitionCols), path, partitionCols)
@@ -209,28 +193,6 @@ object TableOps {
   private def append(
       table: DataFrame, rows: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     write(rows.select(table.columns.map(col).toIndexedSeq: _*), path, "append", partitionCols)
-
-  /** Additive schema union for [[insertIgnore]]/[[upsert]] evolution: both
-    * frames projected to existing-columns ++ incoming-only-columns, with
-    * each side's missing columns null-filled at the other side's type.
-    * Keys must exist on both sides; a shared column with conflicting types
-    * fails (evolution never rewrites a column's type).
-    */
-  private def unionSchemas(
-      existing: DataFrame, incoming: DataFrame, path: String): (DataFrame, DataFrame) = {
-    val ex = existing.schema.map(f => f.name -> f.dataType).toMap
-    val in = incoming.schema.map(f => f.name -> f.dataType).toMap
-    val conflicts = ex.keySet.intersect(in.keySet).filter(c => ex(c) != in(c))
-    require(conflicts.isEmpty,
-      s"$path: schema evolution cannot change column types: " +
-        conflicts.map(c => s"$c (${ex(c)} vs ${in(c)})").mkString(", "))
-    val all = existing.columns ++ incoming.columns.filterNot(ex.contains)
-    def pad(df: DataFrame, types: Map[String, org.apache.spark.sql.types.DataType]) =
-      df.select(all.map(c =>
-        if (types.contains(c)) col(c)
-        else lit(null).cast(ex.getOrElse(c, in(c))).as(c)).toIndexedSeq: _*)
-    (pad(existing, ex), pad(incoming, in))
-  }
 
   /** Fail-fast guard against silent schema drift: a batch whose column set
     * differs from the table's would otherwise append parquet files the
@@ -316,36 +278,22 @@ object TableOps {
     */
   def upsert(
       spark: SparkSession, path: String, incoming: DataFrame,
-      keys: Seq[String], partitionCols: Seq[String] = Nil,
-      allowSchemaEvolution: Boolean = false): Unit =
+      keys: Seq[String], partitionCols: Seq[String] = Nil): Unit =
     withTableLock(spark, path) {
       heal(spark, path)
       val deduped = incoming.dropDuplicates(keys)
-      if (!exists(spark, path)) {
-        write(deduped, path, "overwrite", partitionCols)
-      } else if (allowSchemaEvolution &&
-          read(spark, path).columns.sorted.toSeq != deduped.columns.sorted.toSeq) {
-        // evolving upsert: full rewrite on the union schema (also for
-        // partitioned tables — a partition-targeted swap would leave
-        // untouched partitions' files without the new column)
-        val (existingU, incomingU) = unionSchemas(read(spark, path), deduped, path)
-        val kept = existingU.join(
-          incomingU.select(keys.map(col): _*), keys, "left_anti")
-        replace(spark, path, kept.unionByName(incomingU), partitionCols)
-      } else {
-        val existing = read(spark, path)
-        requireSameColumns(existing, deduped, path)
-        if (partitionCols.isEmpty) {
-          val kept = existing.join(deduped.select(keys.map(col): _*), keys, "left_anti")
-          val merged = kept.select(deduped.columns.map(col).toIndexedSeq: _*).unionByName(deduped)
-          replace(spark, path, merged, partitionCols)
-        } else {
+      existing(spark, path) match {
+        case None => write(deduped, path, "overwrite", partitionCols)
+        case Some(table) =>
+          requireSameColumns(table, deduped, path)
           requirePartitionColsInKeys(partitionCols, keys)
-          val pruned = pruneToPartitions(existing, deduped, partitionCols)
-          val kept = pruned.join(deduped.select(keys.map(col): _*), keys, "left_anti")
-          val merged = kept.select(deduped.columns.map(col).toIndexedSeq: _*).unionByName(deduped)
-          replacePartitions(spark, path, merged, partitionCols)
-        }
+          // pruning over no partition columns is the identity
+          val kept = pruneToPartitions(table, deduped, partitionCols)
+            .join(deduped.select(keys.map(col): _*), keys, "left_anti")
+          val merged = kept.select(deduped.columns.map(col).toIndexedSeq: _*)
+            .unionByName(deduped)
+          if (partitionCols.isEmpty) replace(spark, path, merged, partitionCols)
+          else replacePartitions(spark, path, merged, partitionCols)
       }
     }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ExactRatio.exactRatio
+import graft.operators.Fixpoint
 
 /** Deduplication operators for a training-data pipeline: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -423,42 +424,29 @@ object Dedup {
     * r2 formulation derived both edge orientations from the raw plan and
     * ran the whole candidate pipeline twice).
     *
-    * Convergence detection rides the round's OWN job: the label rows carry
-    * their previous label through the min-aggregate (labels-side rows
-    * contribute (comp, old=comp), message rows (comp, old=null); min
-    * ignores nulls, so each group's `old` is exactly its previous label),
-    * a codegen'd projection turns `comp < old` into a changed flag, and a
-    * pass-through map counts flags into an accumulator WHILE the eager
-    * checkpoint materializes — no separate convergence action per round
-    * (the r3 formulation ran a second `labelSum` job per round). Task
-    * retries can only over-count the accumulator, which at worst costs one
-    * extra (no-op) round — never premature termination; and a fixpoint the
-    * accumulator CLAIMS is confirmed with a one-off label-set equality
-    * check before the loop exits, so termination never rests on
-    * eager-checkpoint materialization semantics. Non-convergence within
-    * `maxRounds` throws — silently returning truncated labels would split
-    * components.
+    * Rounds run on [[graft.operators.Fixpoint]]; progress = labels that fell.
     */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
     val p = pairs.localCheckpoint(true)
     val edges = p
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    checkpointRdd(p).foreach(_.unpersist(false))
+    Memo.unpersistCheckpoint(p)
     // seed = min(self, direct neighbors): the first propagation round comes
     // free with the label build (edges are bidirectional, so `src` covers
     // every node in the pair graph)
-    var labels = edges.groupBy("src")
+    val seed = edges.groupBy("src")
       .agg(min(col("dst")).as("nmin"))
       .select(col("src").as("doc_id"), least(col("src"), col("nmin")).as("comp"))
-      .localCheckpoint(true)
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      val msgs = edges.join(labels, edges("dst") === labels("doc_id"))
+    // label rows carry their label as `old` through the min-aggregate
+    // (message rows carry null, which min ignores), so each group's `old`
+    // is exactly its previous label
+    Fixpoint.iterate("connectedComponents", seed, maxRounds,
+        "graph diameter exceeds maxRounds; raise it (truncated labels " +
+          "would silently split components)") { (labels, _) =>
+      val msgs = edges.join(labels.select(col("doc_id").as("dst"), col("comp")), "dst")
         .select(col("src").as("doc_id"), col("comp"),
           lit(null).cast(labels.schema("comp").dataType).as("old"))
       val merged = labels
@@ -466,49 +454,9 @@ object Dedup {
         .unionByName(msgs)
         .groupBy("doc_id")
         .agg(min(col("comp")).as("comp"), min(col("old")).as("old"))
-        .withColumn("chg", (col("comp") < col("old")).cast("int"))
-      val changes = spark.sparkContext.longAccumulator(s"ccChanges$round")
-      val chgIdx = merged.schema.fieldIndex("chg")
-      val counted = merged.mapPartitions { rows =>
-        rows.map { r =>
-          if (!r.isNullAt(chgIdx) && r.getInt(chgIdx) == 1) changes.add(1L)
-          r
-        }
-      }(org.apache.spark.sql.Encoders.row(merged.schema))
-      val next = counted.select(col("doc_id"), col("comp"))
-        .localCheckpoint(true) // materializes; `changes` is final after this
-      // Termination belt: the accumulator is complete only if the eager
-      // checkpoint above materialized every partition exactly once —
-      // Spark-version-dependent semantics this algorithm must not silently
-      // depend on. A claimed fixpoint is therefore CONFIRMED by label-set
-      // equality (one anti-join over the two checkpointed frames; both
-      // sides carry exactly one row per doc_id, so one direction suffices).
-      // It runs once, at convergence — never in the steady-state rounds.
-      // If the accumulator ever under-counts, the check fails and iteration
-      // continues: termination is provably fixpoint, not accumulator trust.
-      done = changes.value == 0L &&
-        next.join(labels, Seq("doc_id", "comp"), "left_anti").isEmpty
-      checkpointRdd(labels).foreach(_.unpersist(false))
-      labels = next
-      round += 1
-    }
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds - " +
-          "graph diameter exceeds maxRounds; raise it (truncated labels " +
-          "would silently split components)")
-    labels
+      (merged, col("comp") < col("old"))
+    }.select(col("doc_id"), col("comp"))
   }
-
-  /** The cached RDD behind an eagerly localCheckpoint'd Dataset, for
-    * explicit unpersist once a round's labels are superseded (localCheckpoint
-    * truncates lineage, so Spark can never recompute it — only safe on
-    * frames that are provably never read again).
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
 
   /** Exact word-bigram Jaccard over blocked candidate pairs
     * (block = same lang + same first token; swap in [[minhashCandidates]]

@@ -920,27 +920,6 @@ object Graph {
       .limit(topK)
   }
 
-  /** k-core census of the supplier↔part interaction graph: the maximal
-    * subgraph in which every node keeps degree ≥ `k`, found by synchronous
-    * peeling (each round simultaneously drops every node whose CURRENT
-    * induced degree is below `k` — the order-free rendering, so the result
-    * is a set, not a trace). One census row: total nodes, core
-    * nodes/suppliers/parts, core edges, core share. The standard density
-    * screen before sampling walks or training GNN-ish features — the
-    * k-core is where negative sampling stays informative.
-    *
-    * Peeling is DELTA-based: the full degree table is built once, and each
-    * round joins the static checkpointed edge list against only the
-    * just-REMOVED frontier (guard-broadcast — typically tiny after round
-    * one) to decrement survivor degrees. The edge list is hash-partitioned
-    * once and never reshuffled; per-round traffic is O(edges touching the
-    * frontier), not O(edges). Runs a FIXED `rounds` sweeps (idempotent
-    * after the fixpoint — exactly how the oracle unrolls) and then FAILS
-    * LOUDLY if one more peel would still remove nodes, so an
-    * under-provisioned cap can never ship a wrong census. Σd over
-    * survivors = 2·|core edges| (d is the induced degree), so the edge
-    * count needs no extra join.
-    */
   /** Harmonic centrality of a fixed panel of seed nodes over the
     * supplier–part interaction graph: C(s) = Σ_{v≠s} 1/d(s,v), summed to
     * `maxDepth` hops — the standard "how close is this node to everything"
@@ -1081,6 +1060,27 @@ object Graph {
       .select(col("p").as("p_partkey"), col("feat_2hop"), col("n_supp"))
   }
 
+  /** k-core census of the supplier↔part interaction graph: the maximal
+    * subgraph in which every node keeps degree ≥ `k`, found by synchronous
+    * peeling (each round simultaneously drops every node whose CURRENT
+    * induced degree is below `k` — the order-free rendering, so the result
+    * is a set, not a trace). One census row: total nodes, core
+    * nodes/suppliers/parts, core edges, core share. The standard density
+    * screen before sampling walks or training GNN-ish features — the
+    * k-core is where negative sampling stays informative.
+    *
+    * Peeling is DELTA-based: the full degree table is built once, and each
+    * round joins the static checkpointed edge list against only the
+    * just-REMOVED frontier (guard-broadcast — typically tiny after round
+    * one) to decrement survivor degrees. The edge list is hash-partitioned
+    * once and never reshuffled; per-round traffic is O(edges touching the
+    * frontier), not O(edges). Sweeps run on [[graft.operators.Fixpoint]]
+    * and stop once no survivor is below `k` (the oracle's fixed unroll of
+    * `rounds` sweeps is idempotent past that point); reaching `rounds`
+    * with nodes still below `k` FAILS LOUDLY, so an under-provisioned cap
+    * can never ship a wrong census. Σd over survivors = 2·|core edges|
+    * (d is the induced degree), so the edge count needs no extra join.
+    */
   def kCore(
       lineitem: DataFrame, k: Int = 16, rounds: Int = 6): DataFrame =
     kCoreOf(new InteractionGraph(lineitem), k, rounds)
@@ -1095,36 +1095,24 @@ object Graph {
         "a degree-ordered sequential decomposition instead)")
     val edges = g.edges
     // initial degrees: a rename over the artifact's checkpointed degree
-    // table — no extra materialization; the peel loop re-checkpoints its
-    // own shrinking copy each round as before
-    var deg = g.deg
-      .select(col("u").as("node"), col("deg").as("d"))
+    // table — no extra materialization
     val nTotal = g.nNodes
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
-      val removed = deg.filter(col("d") < k).select("node").localCheckpoint()
-      // empty frontier = fixpoint; every remaining sweep is a no-op by
-      // idempotence, so exiting early computes the IDENTICAL set the
-      // oracle's full fixed unroll does — it just skips the dead rounds
-      if (removed.isEmpty) converged = true
-      else {
-        val lost = edges
-          .join(graft.operators.Broadcasting.checked(
-            removed.withColumnRenamed("node", "v"),
-            tag = "k-core removed frontier"), Seq("v"))
-          .groupBy("u").agg(count(lit(1)).as("lost"))
-          .withColumnRenamed("u", "node")
-        deg = deg.filter(col("d") >= k)
-          .join(lost, Seq("node"), "left")
-          .select(col("node"),
-            (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
-          .localCheckpoint() // bound lineage: each round reads bytes
-      }
+    val deg = graft.operators.Fixpoint.iterate("kCore",
+        g.deg.select(col("u").as("node"), col("deg").as("d")), rounds,
+        s"nodes still below k=$k; raise `rounds` (and unroll the oracle " +
+          "to match)") { (deg, _) =>
+      val lost = edges
+        .join(graft.operators.Broadcasting.checked(
+          deg.filter(col("d") < k).select(col("node").as("v")),
+          tag = "k-core removed frontier"), Seq("v"))
+        .groupBy("u").agg(count(lit(1)).as("lost"))
+        .withColumnRenamed("u", "node")
+      (deg.filter(col("d") >= k)
+        .join(lost, Seq("node"), "left")
+        .select(col("node"),
+          (col("d") - coalesce(col("lost"), lit(0L))).as("d")),
+        col("d") < k)
     }
-    require(converged || deg.filter(col("d") < k).count() == 0,
-      s"kCore: nodes still below k=$k after $rounds rounds — " +
-        "the peeling cascade has not converged; raise `rounds` (and " +
-        "unroll the oracle to match)")
     deg.agg(
       count(lit(1)).as("n_core_nodes"),
       coalesce(sum(when(col("node") % 2 === 0, 1L).otherwise(0L)), lit(0L))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Fixpoint
+
 /** Hierarchy analytics without recursive CTEs: Spark has no WITH
   * RECURSIVE, so the ancestor closure of a parent-pointer hierarchy is
   * built by pointer jumping (path doubling) — round k joins the closure
@@ -46,34 +48,18 @@ object Hierarchy {
           "some node has multiple parents (first offenders: " +
           multiParent.select("node").limit(3).collect().mkString(", ") + ")")
     }
-    var closure = edges
-      .select(col("node"), col("parent").as("anc"), lit(1L).as("d"))
-      .localCheckpoint()
-    // Invariant after round k: closure holds ALL ancestor pairs with
-    // d <= 2^k (each node has exactly one ancestor per distance up to its
-    // depth, so the set is duplicate-free). The 2^k-step jump table is
-    // therefore closure.filter(d == 2^k) — it needs no separate join +
-    // checkpoint chain of its own (r14; the r13 shape ran TWO joins and
-    // TWO checkpoints per round, and the sequential job chain, not bytes
-    // or CPU, dominates this operator's wall time at every measured SF).
-    // One join, one checkpoint and one bounded-scan emptiness probe per
-    // round — same closure set, ~half the sequential jobs.
-    var step = 1L // = 2^k, the exact distance the current jump rows carry
-    var rounds = 0
-    while (!closure.filter(col("d") === step).isEmpty) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"ancestorClosure: depth exceeds 2^$maxRounds — cycle, or raise maxRounds")
-      val jump = closure.filter(col("d") === step)
-      // grow: ancestors at 2^k+1 .. 2^(k+1) = closure (d <= 2^k) ∘ jump
-      val grown = closure.as("c")
-        .join(jump.as("j"), col("c.anc") === col("j.node"))
-        .select(col("c.node").as("node"), col("j.anc").as("anc"),
-          (col("c.d") + col("j.d")).as("d"))
-      closure = closure.unionByName(grown).localCheckpoint()
-      step *= 2L
+    // one doubling per [[Fixpoint]] round; progress = the new d == 2^r rows
+    Fixpoint.iterate("ancestorClosure",
+        edges.select(col("node"), col("parent").as("anc"), lit(1L).as("d")),
+        maxRounds, s"depth exceeds 2^$maxRounds: a cycle, or raise maxRounds") {
+      (closure, round) =>
+        val jump = closure.filter(col("d") === (1L << (round - 1)))
+        val grown = closure.as("c")
+          .join(jump.as("j"), col("c.anc") === col("j.node"))
+          .select(col("c.node").as("node"), col("j.anc").as("anc"),
+            (col("c.d") + col("j.d")).as("d"))
+        (closure.unionByName(grown), col("d") === (1L << round))
     }
-    closure
   }
 
   /** Bottom-up level-synchronous SKETCH rollup: per-node subtree KMV

@@ -1,11 +1,8 @@
 package graft
 
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftbridge.ListenerBusBridge.drainListenerBus
 import graft.icenet._
 
 /** [[Tables.parquet]] resolves a parquet schema on the driver: it must give
@@ -16,31 +13,6 @@ class ParquetSchemaSpec extends SparkSpec {
   import spark.implicits._
 
   private val fixtures = "/root/testdata/sf0.001"
-
-  /** `body`'s result and the number of Spark jobs it launched. Jobs are
-    * counted by job group, so jobs of other threads do not count.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"parquet-schema-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "schema resolution", interruptOnCancel = false)
-    try {
-      val result = body
-      drainListenerBus(sc)
-      (result, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Asserts the resolver's schema for `read` equals `inferred`'s, and that
     * `read` launched no job while `inferred` launched at least one (so the

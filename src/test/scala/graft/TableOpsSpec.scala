@@ -297,38 +297,11 @@ class TableOpsSpec extends SparkSpec {
       Set((java.sql.Date.valueOf("2020-01-01"), 1, 11L)))
   }
 
-  test("schema evolution (opt-in): new column null-fills old rows, " +
-    "first/last-write-wins preserved") {
-    val path = tmpDir("evolve") + "/t"
-    TableOps.insertIgnore(spark, path, Seq((1, "a"), (2, "b")).toDF("k", "v"), Seq("k"))
-    // additive insertIgnore: key 2 keeps its original row (nulls in new col)
-    val wider = Seq((2, "CHANGED", 9.9), (3, "c", 3.3)).toDF("k", "v", "score")
-    TableOps.insertIgnore(spark, path, wider, Seq("k"), allowSchemaEvolution = true)
-    val got = TableOps.read(spark, path)
-      .select("k", "v", "score").as[(Int, String, Option[Double])].collect().toSet
-    assert(got == Set((1, "a", None), (2, "b", None), (3, "c", Some(3.3))))
-    // additive upsert: matched key takes the incoming row entirely
-    TableOps.upsert(spark, path,
-      Seq((2, "upd", 2.2, true)).toDF("k", "v", "score", "flag"),
-      Seq("k"), allowSchemaEvolution = true)
-    val got2 = TableOps.read(spark, path)
-      .select("k", "v", "score", "flag")
-      .as[(Int, String, Option[Double], Option[Boolean])].collect().toSet
-    assert(got2 == Set(
-      (1, "a", None, None), (2, "upd", Some(2.2), Some(true)), (3, "c", Some(3.3), None)))
-    // narrower incoming also evolves: missing columns null-fill the incoming
-    TableOps.upsert(spark, path, Seq((4, "d")).toDF("k", "v"),
-      Seq("k"), allowSchemaEvolution = true)
-    assert(TableOps.read(spark, path).filter($"k" === 4)
-      .select("score", "flag").as[(Option[Double], Option[Boolean])].head() == ((None, None)))
-  }
-
-  test("schema evolution never rewrites a column's type") {
-    val path = tmpDir("evolveType") + "/t"
+  test("type drift is rejected, not silently appended") {
+    val path = tmpDir("typeDrift") + "/t"
     TableOps.insertIgnore(spark, path, Seq((1, 10)).toDF("k", "n"), Seq("k"))
     intercept[IllegalArgumentException] {
-      TableOps.insertIgnore(spark, path, Seq((2, "ten")).toDF("k", "n"),
-        Seq("k"), allowSchemaEvolution = true)
+      TableOps.insertIgnore(spark, path, Seq((2, "ten")).toDF("k", "n"), Seq("k"))
     }
   }
 
