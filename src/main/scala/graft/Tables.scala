@@ -29,28 +29,26 @@ object Tables {
     * that task makes (`ParquetFileFormat.readSchemaFromFooter` and a
     * [[ParquetToSparkSchemaConverter]] over the session conf), and passes
     * the result as the read's data schema. Partition columns are still
-    * discovered from the directory names (below `basePath` when given), so
-    * column order and types come out as with inference.
+    * discovered from the directory names, so column order and types come
+    * out as with inference.
     *
     * There is no cache: every read reads the current footer, so a rewritten
     * table never shows a stale schema. A path with no data file falls
     * through to `spark.read.parquet`, which fails as it always has.
     */
-  def parquet(
-      spark: SparkSession, path: String, basePath: Option[String] = None): DataFrame = {
-    val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
+  def parquet(spark: SparkSession, path: String): DataFrame = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val conf = session.sessionState.newHadoopConf()
     val p = new Path(path)
     firstDataFile(p.getFileSystem(conf), p) match {
-      case None => reader.parquet(path)
+      case None => spark.read.parquet(path)
       case Some(file) =>
         val footer = ParquetFooterReader.readFooter(
           HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
         val schema = ParquetFileFormat.readSchemaFromFooter(
           new Footer(file, footer),
           new ParquetToSparkSchemaConverter(session.sessionState.conf))
-        reader.schema(schema).parquet(path)
+        spark.read.schema(schema).parquet(path)
     }
   }
 
@@ -59,7 +57,7 @@ object Tables {
     * directories descended into. `None` when there is none, or no `root`.
     * Stops at the first hit, so it never walks a large table.
     */
-  private[graft] def firstDataFile(fs: FileSystem, root: Path): Option[Path] = {
+  private def firstDataFile(fs: FileSystem, root: Path): Option[Path] = {
     def visible(s: FileStatus) =
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
     def first(s: FileStatus): Option[Path] =

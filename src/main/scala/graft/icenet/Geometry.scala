@@ -37,7 +37,7 @@ object Geometry {
   def wkt4326(north: Boolean)(cx: Column, cy: Column, hx: Column, hy: Column): Column =
     graft.functions.Wkt4326Ring.wkt4326(north)(cx, cy, hx, hy)
 
-  /** Axis-length bound for [[buildCells]]: the EASE-Grid 2.0 axes are O(500)
+  /** Axis-length bound for [[axes]]: the EASE-Grid 2.0 axes are O(500)
     * values by contract (25 km pitch over a hemisphere, SURVEY §1.1); 16384
     * is ~30x headroom. Anything bigger is a mis-wired input (a fact table
     * where an axis belongs), and the unpartitioned id window in [[cellsOf]]
@@ -75,7 +75,7 @@ object Geometry {
     val r = values.agg(aggs.head, aggs.tail: _*).head()
     val (x, y) = (Axis(r.getDouble(0), r.getLong(1)), Axis(r.getDouble(2), r.getLong(3)))
     require(x.n <= MaxAxisLen && y.n <= MaxAxisLen,
-      s"buildCells axes have ${x.n} x ${y.n} distinct centroids; the contract is " +
+      s"grid axes have ${x.n} x ${y.n} distinct centroids; the contract is " +
         s"O(500) grid axes (max $MaxAxisLen). A data-sized table would " +
         "single-task the cell_id window — use GlobalRowNumber for scalable ids.")
     (x, y)
@@ -109,22 +109,5 @@ object Geometry {
       .withColumn("cell_id", lit(maxId) +
         row_number().over(Window.orderBy("centroid_x", "centroid_y")).cast("long"))
       .select("cell_id", "centroid_x", "centroid_y", geomCol, "geom_4326")
-  }
-
-  /** Build the cell dimension table from the two centroid axes: cross join
-    * (J3, processor.py:223-226) + WKT rings + deterministic surrogate key.
-    *
-    * The reference's `cell_id SERIAL` assigns ids in arrival order; we order
-    * by the natural key `(centroid_x, centroid_y)` so ids are reproducible:
-    * 1..N for a fresh grid ([[cellsOf]] with `maxId = 0`). Axes are
-    * size-guarded to [[MaxAxisLen]] before the cross join, so the
-    * single-partition window for id assignment is bounded by construction;
-    * the result is broadcast downstream anyway. A data-sized keyed table
-    * needs [[graft.operators.GlobalRowNumber]] instead.
-    */
-  def buildCells(xAxis: DataFrame, yAxis: DataFrame, north: Boolean): DataFrame = {
-    val values = axisValues(xAxis, yAxis)
-    val (x, y) = axes(values)
-    cellsOf(pairs(values), x, y, north, maxId = 0L)
   }
 }

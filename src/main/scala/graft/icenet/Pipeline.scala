@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * The reference's five PostgreSQL round-trips collapse into five DataFrame
   * plans over one warehouse directory. Re-running any file is a fixed point:
   * cells and forecasts are first-write-wins, meta is last-write-wins, the
-  * latest view is a full recompute — identical convergence semantics to the
-  * reference's ON CONFLICT clauses (processor.py:256,333,395-401,444-448).
+  * latest view is rebuilt from the fact table's newest date (a late replay
+  * leaves it as it is) — identical convergence semantics to the reference's
+  * ON CONFLICT clauses and view refresh (processor.py:256,333,395-401,444-448).
   */
 class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
   private val h = hemi.name
@@ -24,12 +25,11 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
   val quarantinePath: String = s"$warehouse/${h}_forecast_quarantine"
 
   /** Run the whole pipeline for one raw long-form file frame. The view
-    * refresh uses [[updateLatestIncremental]] (provably equal to the full
-    * recompute, PipelineSpec) so a one-date ingest touches one date's
-    * partitions end to end; [[updateLatest]] remains the full-recompute
-    * escape hatch (e.g. after a manual fact-table repair). A drop on an
-    * already-known grid writes nothing to the cell table, and new cells
-    * continue the existing ids ([[updateGeometries]]).
+    * refresh uses [[updateLatestIncremental]] (equal to the full recompute
+    * [[latestView]], PipelineSpec) so a one-date ingest touches one date's
+    * partitions end to end. A drop on an already-known grid writes nothing
+    * to the cell table, and new cells continue the existing ids
+    * ([[updateGeometries]]).
     */
   def ingest(raw: DataFrame): Unit = {
     val loaded = Ingest.load(raw).cache()
@@ -159,24 +159,20 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
       .select((factCols :+ "geom_4326" :+ "forecast_id").map(col): _*)
   }
 
-  def updateLatest(): Unit =
-    TableOps.overwriteView(spark, latestPath, latestView())
-
   /** Incremental S7 — the scale path the reference lacks: its
     * `REFRESH MATERIALIZED VIEW` recomputes the view from ALL facts on
     * every ingest (processor.py:444-448), which at 100 TB re-reads years
     * of partitions to re-derive one date. The view only ever shows the
     * max generation date, so its next state is decidable from bounded
-    * scalars (incoming date, fact table's max date, current view date):
+    * scalars (incoming date, fact table's max date, current view date),
+    * and there is one rebuild: the facts of their max date, a
+    * partition-pruned scan of the same fact-table read that gave the max.
     *
-    *  - incoming == facts' max: the view's next content is exactly the
-    *    incoming date's facts — rebuild from THAT one partition
-    *    (partition-pruned scan of the same fact-table read that gave the
-    *    max), identical result to the full recompute. The view's date is
-    *    not read on this path.
+    *  - incoming == facts' max: the view's next content is exactly that
+    *    date's facts, so it is rebuilt. The view's date is not read.
     *  - otherwise (a late replay): the view is already correct when it
     *    shows facts' max, and nothing runs; a stale or absent view is
-    *    recomputed in full.
+    *    rebuilt.
     *
     * PipelineSpec asserts equality with [[latestView]]'s full recompute
     * after new-date, same-date and older-date ingests.
@@ -191,27 +187,17 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     // (partition-column aggregates). An EMPTY incoming frame (incoming ==
     // null) does not return early: this method is the designated heal point
     // for a crash that landed between updateForecasts and the view refresh,
-    // and an empty drop must still detect facts-ahead-of-view and repair it
-    // (it falls through to the stale-view branch below).
+    // and an empty drop must still detect facts-ahead-of-view and repair it.
     val facts = TableOps.read(spark, forecastPath)
     val factsMax = facts.agg(max("date_forecast_generated")).head().getDate(0)
     if (factsMax == null) return // fact table exists but is empty: no view state
-    if (incoming != null && incoming == factsMax) {
-      // this ingest IS the newest date: the view's next content is exactly
-      // that date's facts — rebuild from the one partition-pruned date
+    // read only when this drop is not the newest date
+    def viewShowsMax = TableOps.exists(spark, latestPath) &&
+      TableOps.read(spark, latestPath).agg(max("date_forecast_generated"))
+        .head().getDate(0) == factsMax
+    if (factsMax == incoming || !viewShowsMax)
       TableOps.overwriteView(spark, latestPath,
-        viewOf(facts.filter(col("date_forecast_generated") === lit(incoming))))
-    } else {
-      // only now is the view's own date needed. A view that already shows
-      // the max date needs nothing (the late-replay fast path); a stale or
-      // absent one (crash recovery, manual repair) needs the full recompute
-      val current =
-        if (TableOps.exists(spark, latestPath))
-          Option(TableOps.read(spark, latestPath)
-            .agg(max("date_forecast_generated")).head().getDate(0))
-        else None
-      if (!current.contains(factsMax)) updateLatest()
-    }
+        viewOf(facts.filter(col("date_forecast_generated") === lit(factsMax))))
   }
 
   /** Registers the warehouse tables and the latest view in the session

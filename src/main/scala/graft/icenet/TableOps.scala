@@ -1,6 +1,6 @@
 package graft.icenet
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -15,7 +15,8 @@ import graft.Tables
   *    (the cell table's continuing ids), and it skips the write when
   *    nothing is new.
   *  - S6 `INSERT ... SELECT ... ON CONFLICT DO UPDATE` (processor.py:375-403)
-  *    -> [[upsert]]: union-by-key with incoming precedence (last write wins).
+  *    -> [[upsert]]: union-by-key with incoming precedence (last write wins),
+  *    committed as a whole-table swap.
   *  - S7 `REFRESH MATERIALIZED VIEW` (processor.py:444-448) ->
   *    [[overwriteView]]: full recompute + crash-safe directory swap.
   *  - S8 `CREATE TABLE IF NOT EXISTS` (processor.py:198-209 etc.) ->
@@ -24,18 +25,20 @@ import graft.Tables
   * On a shared cluster these four become Delta/Iceberg `MERGE`/`INSERT`/
   * `CREATE OR REPLACE` with optimistic concurrency; this parquet
   * implementation keeps identical *semantics* (idempotent convergence,
-  * verified by ForecastPipelineSpec) with single-writer discipline — which is
+  * verified by PipelineSpec) with single-writer discipline — which is
   * exactly the reference's own concurrency model (host.json:4-8 forces
   * strictly serial processing).
   *
-  * Crash-safety model (the parquet stand-in for a transactional commit):
-  *  - [[replace]] never deletes the current table before its successor is in
-  *    place: write `.staging`, rename current -> `.old`, rename `.staging` ->
-  *    current, delete `.old`. The commit point is the second rename; at every
-  *    instant either the table dir or its `.old` sibling holds one complete
-  *    consistent version, and [[read]]/[[exists]] fall back to `.old` when a
-  *    crash landed between the renames. Leftover `.staging`/`.old` dirs are
-  *    cleaned by the next replace.
+  * Crash-safety model (the parquet stand-in for a transactional commit): one
+  * swap and one keyed append.
+  *  - [[replace]], the swap behind [[upsert]], [[overwriteView]] and
+  *    [[compact]], never deletes the current table before its successor is
+  *    in place: write `.staging`, rename current -> `.old`, rename
+  *    `.staging` -> current, delete `.old`. The commit point is the second
+  *    rename; at every instant either the table dir or its `.old` sibling
+  *    holds one complete consistent version, and [[read]]/[[exists]] fall
+  *    back to `.old` when a crash landed between the renames. Leftover
+  *    `.staging`/`.old` dirs are cleaned by the next replace.
   *  - [[insertIgnore]]'s append commits file-at-a-time (Spark's task-commit
   *    rename). A crash can leave a PARTIAL batch visible, but every appended
   *    row is a brand-new key (anti-joined), so re-running the same ingest
@@ -113,37 +116,13 @@ object TableOps {
       .delete(lock, false)
   }
 
-  /** Readers racing a crashed swap must always see one complete committed
-    * version (the class crash-safety model): [[resolve]] covers a crashed
-    * full-table [[replace]] (fall back to `.old`); the union below covers a
-    * crashed [[replacePartitions]] — any parked `.oldparts` leaf whose
-    * current partition dir is missing is the last committed version of that
-    * partition and is read alongside the table (read-only: [[heal]], which
-    * physically promotes it, only runs under the writer lock).
-    *
-    * Every frame here comes from [[graft.Tables.parquet]], which takes the
-    * schema from one footer on the driver: building a read launches no
-    * Spark job, the root and each parked leaf alike.
+  /** The table's last committed version: the table dir, or its `.old`
+    * sibling when a crash landed between [[replace]]'s renames
+    * ([[resolve]]). [[graft.Tables.parquet]] takes the schema from one
+    * footer on the driver, so building a read launches no Spark job.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val root = resolve(spark, path)
-    val oldparts = new Path(path + ".oldparts")
-    val fs = oldparts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val orphans = parkedLeaves(fs, oldparts).collect {
-      case (leaf, rel) if !fs.exists(new Path(new Path(root), rel)) => leaf
-    }
-    def parked(df: Option[DataFrame], leaves: Seq[Path]): DataFrame =
-      leaves.map(l => Tables.parquet(spark, l.toString, Some(oldparts.toString)))
-        .foldLeft(df)((acc, d) => Some(acc.fold(d)(_.unionByName(d)))).get
-    // A crash between [[replacePartitions]]' park rename and staging rename
-    // on a table whose ONLY partition was being swapped leaves the root with
-    // no data files at all (just _SUCCESS and empty partition skeletons) —
-    // reading the root would fail for want of a schema even though the
-    // parked leaves hold a complete committed version. Read those alone.
-    if (orphans.nonEmpty && Tables.firstDataFile(fs, new Path(root)).isEmpty)
-      parked(None, orphans)
-    else parked(Some(Tables.parquet(spark, root)), orphans)
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    Tables.parquet(spark, resolve(spark, path))
 
   /** S5: idempotent first-write-wins append. Rows whose key already exists
     * in the table are silently dropped (the PG unique-index arbitration).
@@ -264,46 +243,32 @@ object TableOps {
     }
 
   /** S6: last-write-wins upsert — matched keys take the incoming row,
-    * unmatched existing rows are kept, new keys are inserted.
-    *
-    * PARTITION-TARGETED when `partitionCols` is set: only the partitions
-    * whose values occur in the incoming batch are read, merged, and
-    * rewritten — a one-date upsert against years of facts touches one
-    * date's files, not the whole table ([[replacePartitions]]). Untouched
-    * partitions' files are left byte-identical. Sound because
-    * `partitionCols` must be a subset of `keys` (enforced): the key
-    * determines the partition, so a matched key can only live in an
-    * affected partition. Unpartitioned tables fall back to the full
-    * crash-safe swap.
+    * unmatched existing rows are kept, new keys are inserted. Every upsert
+    * rewrites the whole table through [[replace]], which is sized for the
+    * O(dates) `forecast_meta` rollup, the reference's one last-write-wins
+    * table (processor.py:375-403).
     */
   def upsert(
       spark: SparkSession, path: String, incoming: DataFrame,
-      keys: Seq[String], partitionCols: Seq[String] = Nil): Unit =
+      keys: Seq[String]): Unit =
     withTableLock(spark, path) {
       heal(spark, path)
       val deduped = incoming.dropDuplicates(keys)
       existing(spark, path) match {
-        case None => write(deduped, path, "overwrite", partitionCols)
+        case None => write(deduped, path, "overwrite", Nil)
         case Some(table) =>
           requireSameColumns(table, deduped, path)
-          requirePartitionColsInKeys(partitionCols, keys)
-          // pruning over no partition columns is the identity
-          val kept = pruneToPartitions(table, deduped, partitionCols)
-            .join(deduped.select(keys.map(col): _*), keys, "left_anti")
-          val merged = kept.select(deduped.columns.map(col).toIndexedSeq: _*)
-            .unionByName(deduped)
-          if (partitionCols.isEmpty) replace(spark, path, merged, partitionCols)
-          else replacePartitions(spark, path, merged, partitionCols)
+          val kept = table.join(deduped.select(keys.map(col): _*), keys, "left_anti")
+          replace(spark, path,
+            kept.select(deduped.columns.map(col).toIndexedSeq: _*).unionByName(deduped), Nil)
       }
     }
 
   /** S7: materialized-view refresh — full recompute, crash-safe swap. */
-  def overwriteView(
-      spark: SparkSession, path: String, view: DataFrame,
-      partitionCols: Seq[String] = Nil): Unit =
+  def overwriteView(spark: SparkSession, path: String, view: DataFrame): Unit =
     withTableLock(spark, path) {
       heal(spark, path)
-      replace(spark, path, view, partitionCols)
+      replace(spark, path, view, Nil)
     }
 
   /** Compacts a table's files into ~`targetBytes` outputs via the same
@@ -360,103 +325,18 @@ object TableOps {
     fs.delete(old, true)
   }
 
-  /** Partition-directory swap: replaces ONLY the leaf partition directories
-    * present in `df`, leaving every other partition's files untouched (the
-    * spec asserts byte-identity). Protocol mirrors [[replace]] at leaf
-    * granularity: materialize the new partitions under `.staging`, then per
-    * leaf rename current -> `.oldparts/<leaf>` and `.staging/<leaf>` ->
-    * current. Displaced versions are parked OUTSIDE the table dir (a
-    * `pc=v.old` sibling INSIDE it would be parsed as a partition value by
-    * readers). A crash mid-sequence leaves each partition individually
-    * consistent — some new, some old — and [[heal]] promotes any orphaned
-    * `.oldparts` leaf whose current dir is missing; re-running the same
-    * upsert then converges (it is idempotent per partition).
-    */
-  private def replacePartitions(
-      spark: SparkSession, path: String, df: DataFrame,
-      partitionCols: Seq[String]): Unit = {
-    val staging = new Path(path + ".staging")
-    val oldparts = new Path(path + ".oldparts")
-    val cur = new Path(path)
-    write(df, staging.toString, "overwrite", partitionCols)
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(oldparts, true) // leftover from an earlier crash, superseded
-    for (leaf <- leafPartitionDirs(fs, staging, partitionCols.length)) {
-      // listStatus returns scheme-qualified paths (file:/..., hdfs://...)
-      // while `staging` may be unqualified, so a string stripPrefix can
-      // silently no-op; rebuild the table-relative path from the leaf's
-      // trailing name segments instead (one per partition column).
-      val rel = Iterator.iterate(leaf)(_.getParent)
-        .take(partitionCols.length).map(_.getName).toSeq.reverse.mkString("/")
-      val dst = new Path(cur, rel)
-      if (fs.exists(dst)) {
-        val parked = new Path(oldparts, rel)
-        fs.mkdirs(parked.getParent)
-        fs.rename(dst, parked)
-      } else fs.mkdirs(dst.getParent)
-      fs.rename(leaf, dst) // commit point for this partition
-    }
-    fs.delete(oldparts, true)
-    fs.delete(staging, true)
-  }
-
-  /** Directories exactly `depth` levels below `base` (the leaf partition
-    * dirs of a `partitionBy(partitionCols)` layout; `_SUCCESS` etc. are
-    * files and drop out of the directory filter).
-    */
-  private def leafPartitionDirs(
-      fs: FileSystem, base: Path, depth: Int): Seq[Path] =
-    if (depth == 0) Seq(base)
-    else fs.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath)
-      .flatMap(p => leafPartitionDirs(fs, p, depth - 1))
-
   /** Repairs a crashed swap BEFORE any new write: if the table dir is gone
     * but `.old` survives (a crash between [[replace]]'s two renames),
     * promote `.old` back to the table dir. Without this, an append after
     * such a crash would create a fresh table dir that SHADOWS the committed
     * data still sitting in `.old`. Must run before plans over [[read]] are
     * built, so lazy scans never point at a path the heal then moves.
-    *
-    * Likewise repairs a crashed PARTITION swap: any `.oldparts` leaf whose
-    * current partition dir is missing (crash between [[replacePartitions]]'
-    * two renames) is promoted back; leaves whose current dir exists were
-    * already superseded and are discarded.
     */
   private def heal(spark: SparkSession, path: String): Unit = {
     val cur = new Path(path)
     val old = new Path(path + ".old")
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(cur) && fs.exists(old)) fs.rename(old, cur)
-    val oldparts = new Path(path + ".oldparts")
-    if (fs.exists(oldparts)) {
-      for ((leaf, rel) <- parkedLeaves(fs, oldparts)) {
-        val dst = new Path(cur, rel)
-        if (!fs.exists(dst)) { fs.mkdirs(dst.getParent); fs.rename(leaf, dst) }
-      }
-      fs.delete(oldparts, true)
-    }
-  }
-
-  /** (parked leaf dir, table-relative path) pairs under `.oldparts`: the
-    * directories that directly contain files, keyed by their path below
-    * `.oldparts`. The depth of the partition layout is discoverable from
-    * the layout itself, so no partition-column count is needed. Empty when
-    * `.oldparts` is absent — and crucially, EMPTY directories are never
-    * emitted: a crash between `mkdirs(parked.getParent)` and the park
-    * rename leaves a file-less skeleton, and emitting it (or the bare
-    * `.oldparts` root with an empty rel) would make every read/heal throw
-    * on `new Path(cur, "")` or fail parquet schema inference — bricking
-    * the table until manual cleanup.
-    */
-  private def parkedLeaves(fs: FileSystem, oldparts: Path): Seq[(Path, String)] = {
-    def walk(p: Path, rel: String): Seq[(Path, String)] = {
-      val entries = fs.listStatus(p)
-      val leaf =
-        if (rel.nonEmpty && entries.exists(_.isFile)) Seq((p, rel)) else Nil
-      leaf ++ entries.filter(_.isDirectory).toSeq.flatMap(d => walk(d.getPath,
-        if (rel.isEmpty) d.getPath.getName else rel + "/" + d.getPath.getName))
-    }
-    if (fs.exists(oldparts)) walk(oldparts, "") else Nil
   }
 
   /** ANALYZE: per-column (min, max, null count, exact NDV) in long form —

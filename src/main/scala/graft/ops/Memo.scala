@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** Hygiene shared by the session-keyed build-once artifact memos
   * ([[Recommend.recommendationsFor]], [[Graph.interactionGraphFor]],
-  * [[Graph.coPurchaseEdgesFor]]).
+  * [[Graph.coPurchaseEdgesFor]], [[Dedup.dedupArtifactsFor]]).
   *
   * Two leaks a long-lived process would otherwise accumulate:
   *  - entries keyed by a STOPPED session pin the session object (and with

@@ -72,37 +72,18 @@ class BroadcastingSpec extends SparkSpec {
   }
 
   test("probe verdict is memoized per plan; recheck=true bypasses the cache") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import java.util.concurrent.atomic.AtomicInteger
     // a var-width side with a plan unique to this test (the literal makes
     // the canonicalized plan distinct from every other suite's)
     def side() = Seq((1, "memo-probe-a"), (2, "memo-probe-b")).toDF("k", "v")
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // listener events are async; poll up to a deadline for >= expected,
-    // then settle briefly before asserting "no new jobs"
-    def awaitAtLeast(n: Int): Unit = {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < n && System.nanoTime() < deadline) Thread.sleep(25)
-      Thread.sleep(300) // let any stragglers land before reading a final count
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(hasBroadcastHint(Broadcasting.checked(side()))) // probe runs (>=1 job)
-      awaitAtLeast(1)
-      val afterFirst = jobs.get()
-      assert(afterFirst >= 1, "first call must execute the probe")
-      assert(hasBroadcastHint(Broadcasting.checked(side()))) // same canonical plan
-      awaitAtLeast(afterFirst)
-      assert(jobs.get() == afterFirst,
-        "second call on the same plan must hit the memoized verdict (no job)")
-      assert(hasBroadcastHint(Broadcasting.checked(side(), recheck = true)))
-      awaitAtLeast(afterFirst + 1)
-      assert(jobs.get() > afterFirst,
-        "recheck=true must bypass the cache and re-run the probe")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (first, firstJobs) = jobsOf(Broadcasting.checked(side()))
+    assert(hasBroadcastHint(first))
+    assert(firstJobs >= 1, "first call must execute the probe")
+    val (second, secondJobs) = jobsOf(Broadcasting.checked(side())) // same canonical plan
+    assert(hasBroadcastHint(second))
+    assert(secondJobs == 0,
+      "second call on the same plan must hit the memoized verdict (no job)")
+    val (rechecked, recheckJobs) = jobsOf(Broadcasting.checked(side(), recheck = true))
+    assert(hasBroadcastHint(rechecked))
+    assert(recheckJobs >= 1, "recheck=true must bypass the cache and re-run the probe")
   }
 }

@@ -54,22 +54,6 @@ class ParquetSchemaSpec extends SparkSpec {
     assert(TableOps.read(spark, path).count() == 2)
   }
 
-  test("a partition-swap orphan .oldparts leaf, read below its basePath") {
-    val path = tmpDir("tp") + "/t"
-    TableOps.insertIgnore(spark, path,
-      Seq((1, "a", "2020-01-01"), (2, "b", "2020-01-02")).toDF("k", "v", "d"),
-      Seq("k", "d"), partitionCols = Seq("d"))
-    val oldparts = path + ".oldparts"
-    fs.mkdirs(new Path(oldparts))
-    fs.rename(new Path(path + "/d=2020-01-01"), new Path(oldparts + "/d=2020-01-01"))
-    val leaf = oldparts + "/d=2020-01-01"
-    assertResolved("parked leaf", Tables.parquet(spark, leaf, Some(oldparts)),
-      spark.read.option("basePath", oldparts).parquet(leaf))
-    assertResolved("table with orphan", TableOps.read(spark, path), spark.read.parquet(path))
-    assert(TableOps.read(spark, path).orderBy("k").as[(Int, String, String)].collect()
-      .toSeq.map(_._3) == Seq("2020-01-01", "2020-01-02"))
-  }
-
   test("Tables.events and two other fixture tables") {
     val (events, jobs) = jobsOf(Tables.events(spark, fixtures).schema)
     assert(jobs == 0, s"Tables.events launched $jobs jobs")

@@ -98,8 +98,10 @@ class PipelineSpec extends SparkSpec {
     assert(TableOps.read(spark, p.latestPath)
       .select("date_forecast_generated").distinct().head().getDate(0)
       == Date.valueOf("2020-06-08"))
+    val viewFiles = filesUnder(p.latestPath)
     ingestIncremental(rawFile("2020-06-01", 0.2)) // OLDER date: view untouched
     viewEqualsFull()
+    assert(filesUnder(p.latestPath) == viewFiles, "a late replay must not rebuild the view")
     ingestIncremental(rawFile("2020-06-08", 0.1)) // SAME date replay: fixed point
     viewEqualsFull()
     // view removed (manual repair) + OLDER-date replay: must rebuild the

@@ -185,118 +185,6 @@ class TableOpsSpec extends SparkSpec {
     assert(TableOps.read(spark, path).as[(Int, String)].collect().toSet == before)
   }
 
-  test("partitioned upsert: updates keys, adds new partition, leaves " +
-    "untouched partition byte-identical") {
-    import org.apache.spark.sql.functions.to_date
-    val path = tmpDir("partUpsert") + "/t"
-    val v1 = Seq(("2020-01-01", 1, 10L), ("2020-01-01", 2, 20L),
-        ("2020-01-02", 3, 30L))
-      .toDF("d", "k", "n").withColumn("d", to_date($"d"))
-    TableOps.upsert(spark, path, v1, Seq("d", "k"), partitionCols = Seq("d"))
-    // snapshot the untouched partition's files (name, size, mtime)
-    def leafFiles(day: String) = {
-      val dir = new java.io.File(path, s"d=$day")
-      dir.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.length(), f.lastModified())).toSet
-    }
-    val untouchedBefore = leafFiles("2020-01-02")
-    // update a key in 2020-01-01, insert a brand-new partition 2020-01-03
-    val v2 = Seq(("2020-01-01", 2, 99L), ("2020-01-03", 4, 40L))
-      .toDF("d", "k", "n").withColumn("d", to_date($"d"))
-    TableOps.upsert(spark, path, v2, Seq("d", "k"), partitionCols = Seq("d"))
-    val got = TableOps.read(spark, path)
-      .select("d", "k", "n").as[(java.sql.Date, Int, Long)].collect().toSet
-    assert(got == Set(
-      (java.sql.Date.valueOf("2020-01-01"), 1, 10L),
-      (java.sql.Date.valueOf("2020-01-01"), 2, 99L), // updated
-      (java.sql.Date.valueOf("2020-01-02"), 3, 30L), // untouched
-      (java.sql.Date.valueOf("2020-01-03"), 4, 40L))) // new partition
-    assert(leafFiles("2020-01-02") == untouchedBefore,
-      "untouched partition must not be rewritten")
-    // idempotent: re-running the same upsert is a fixed point
-    TableOps.upsert(spark, path, v2, Seq("d", "k"), partitionCols = Seq("d"))
-    assert(TableOps.read(spark, path)
-      .select("d", "k", "n").as[(java.sql.Date, Int, Long)].collect().toSet == got)
-  }
-
-  test("empty .oldparts skeleton (crash before the park rename) does not " +
-    "brick reads or heals") {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.to_date
-    val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val path = tmpDir("crashSkel") + "/t"
-    val v1 = Seq(("2020-01-01", 1, 10L)).toDF("d", "k", "n")
-      .withColumn("d", to_date($"d"))
-    TableOps.upsert(spark, path, v1, Seq("d", "k"), partitionCols = Seq("d"))
-    // crash after mkdirs(parked.getParent), before any rename: an empty
-    // directory skeleton under .oldparts, no files anywhere in it
-    fs.mkdirs(new Path(path + ".oldparts/d=2020-01-09"))
-    assert(TableOps.read(spark, path).count() == 1) // read unaffected
-    // next mutating op heals: skeleton removed, write proceeds
-    TableOps.upsert(spark, path,
-      Seq(("2020-01-02", 2, 20L)).toDF("d", "k", "n").withColumn("d", to_date($"d")),
-      Seq("d", "k"), partitionCols = Seq("d"))
-    assert(!fs.exists(new Path(path + ".oldparts")))
-    assert(TableOps.read(spark, path).count() == 2)
-  }
-
-  test("partition-swap crash window: reader unions orphaned .oldparts leaf") {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.to_date
-    val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val path = tmpDir("crashParts") + "/t"
-    val v1 = Seq(("2020-01-01", 1, 10L), ("2020-01-02", 3, 30L))
-      .toDF("d", "k", "n").withColumn("d", to_date($"d"))
-    TableOps.upsert(spark, path, v1, Seq("d", "k"), partitionCols = Seq("d"))
-    // simulate a crash between rename(dst -> parked) and rename(leaf -> dst):
-    // the 2020-01-01 partition is parked under .oldparts, absent from cur
-    fs.mkdirs(new Path(path + ".oldparts"))
-    fs.rename(new Path(path, "d=2020-01-01"),
-      new Path(path + ".oldparts/d=2020-01-01"))
-    // read-side fallback: the parked partition's rows are still visible
-    assert(TableOps.read(spark, path)
-      .select("d", "k", "n").as[(java.sql.Date, Int, Long)].collect().toSet ==
-      Set((java.sql.Date.valueOf("2020-01-01"), 1, 10L),
-          (java.sql.Date.valueOf("2020-01-02"), 3, 30L)))
-    // the next mutating op heals (promotes the parked leaf) and converges
-    TableOps.upsert(spark, path,
-      Seq(("2020-01-02", 3, 31L)).toDF("d", "k", "n").withColumn("d", to_date($"d")),
-      Seq("d", "k"), partitionCols = Seq("d"))
-    assert(!fs.exists(new Path(path + ".oldparts")))
-    assert(TableOps.read(spark, path)
-      .select("d", "k", "n").as[(java.sql.Date, Int, Long)].collect().toSet ==
-      Set((java.sql.Date.valueOf("2020-01-01"), 1, 10L),
-          (java.sql.Date.valueOf("2020-01-02"), 3, 31L)))
-  }
-
-  test("single-partition table: crash leaving ONLY parked data stays readable") {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.to_date
-    val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val path = tmpDir("crashSolo") + "/t"
-    val v1 = Seq(("2020-01-01", 1, 10L)).toDF("d", "k", "n")
-      .withColumn("d", to_date($"d"))
-    TableOps.upsert(spark, path, v1, Seq("d", "k"), partitionCols = Seq("d"))
-    // crash between the park rename and the staging rename on the table's
-    // ONLY partition: the root keeps no data files at all (just _SUCCESS),
-    // so a plain parquet read of it would fail schema inference
-    fs.mkdirs(new Path(path + ".oldparts"))
-    fs.rename(new Path(path, "d=2020-01-01"),
-      new Path(path + ".oldparts/d=2020-01-01"))
-    assert(TableOps.read(spark, path)
-      .select("d", "k", "n").as[(java.sql.Date, Int, Long)].collect().toSet ==
-      Set((java.sql.Date.valueOf("2020-01-01"), 1, 10L)),
-      "reader must fall back to the parked leaves when the root is data-less")
-    // the next mutating op heals and the re-run upsert converges
-    TableOps.upsert(spark, path,
-      Seq(("2020-01-01", 1, 11L)).toDF("d", "k", "n").withColumn("d", to_date($"d")),
-      Seq("d", "k"), partitionCols = Seq("d"))
-    assert(!fs.exists(new Path(path + ".oldparts")))
-    assert(TableOps.read(spark, path)
-      .select("d", "k", "n").as[(java.sql.Date, Int, Long)].collect().toSet ==
-      Set((java.sql.Date.valueOf("2020-01-01"), 1, 11L)))
-  }
-
   test("type drift is rejected, not silently appended") {
     val path = tmpDir("typeDrift") + "/t"
     TableOps.insertIgnore(spark, path, Seq((1, 10)).toDF("k", "n"), Seq("k"))

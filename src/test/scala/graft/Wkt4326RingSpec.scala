@@ -6,8 +6,8 @@ import graft.icenet.{Geometry, Laea}
 
 /** The promoted LAEA ring expression (ex-wkt4326Udf): value parity with the
   * geodesy reference, codegen execution, null safety, SQL registration, and
-  * the buildCells axis-size guard that the expression's bounded-input
-  * contract rides on.
+  * the grid-axis size guard ([[Geometry.axes]]) that the expression's
+  * bounded-input contract rides on.
   */
 class Wkt4326RingSpec extends SparkSpec {
   import spark.implicits._
@@ -75,7 +75,7 @@ class Wkt4326RingSpec extends SparkSpec {
       .select((col("id") * 25000L).cast("double").as("centroid_x"))
     val y = Seq(0.0, 25000.0).toDF("centroid_y")
     val e = intercept[IllegalArgumentException] {
-      Geometry.buildCells(big, y, north = true)
+      Geometry.axes(Geometry.axisValues(big, y))
     }
     assert(e.getMessage.contains("GlobalRowNumber"))
   }
