@@ -166,9 +166,7 @@ object Bench {
       val r = timeNoop(body)
       if (r.ok) r.seconds else -r.seconds
     }
-    graft.ops.Recommend.invalidateRecommendations()
-    graft.ops.Graph.invalidateInteractionGraphs()
-    graft.ops.Dedup.invalidateDedupArtifacts()
+    graft.ops.Memo.invalidate()
     Seq(
       "rec" -> t(graft.ops.Recommend.recommendationsFor(
         sfDir, Tables.lineitem(spark, sfDir), Tables.orders(spark, sfDir))),

@@ -3109,7 +3109,7 @@ object SparkEntry {
   )
 
   /** graph_kcore oracle: synchronous peeling unrolled to the same fixed
-    * 6 rounds as [[graft.ops.Graph.kCore]] — each round recomputes induced
+    * 6 rounds as [[graft.ops.Graph.kCoreOf]] — each round recomputes induced
     * degrees over the previous survivor set and keeps nodes at >= 16.
     * Rounds past the fixpoint reproduce the set unchanged, so the fixed
     * unroll is exact regardless of where convergence lands (the Spark op

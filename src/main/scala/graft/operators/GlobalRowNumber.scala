@@ -52,19 +52,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object GlobalRowNumber {
 
-  /** Appends `idCol` (LONG, 1-based, dense) numbering `df` by `orderCols`.
-    *
-    * @param numParts range-partition count; 0 = the session's shuffle
-    *                 parallelism. Sizing rule at scale: data size /
-    *                 `numParts` must fit a task's sort buffer.
+  /** Appends `idCol` (LONG, 1-based, dense) numbering `df` by `orderCols`,
+    * range-partitioned at the session's shuffle parallelism. Sizing rule
+    * at scale: data size / that width must fit a task's sort buffer.
     */
   def withGlobalRowNumber(
-      df: DataFrame, idCol: String, orderCols: Seq[Column],
-      numParts: Int = 0): DataFrame = {
+      df: DataFrame, idCol: String, orderCols: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
-    val parts =
-      if (numParts > 0) numParts
-      else spark.sessionState.conf.numShufflePartitions
+    val parts = spark.sessionState.conf.numShufflePartitions
     val ranged = df.repartitionByRange(parts, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
     val rdd = ranged.queryExecution.toRdd // ONE RDD — both jobs share its shuffle

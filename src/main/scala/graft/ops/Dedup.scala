@@ -310,9 +310,6 @@ object Dedup {
     * under codegen CSE) and every vote is a shift-and-mask on a long —
     * integer ops all the way into the 32 fixed-width sum aggregates.
     */
-  private def simhashSums(docs: DataFrame): DataFrame =
-    simhashSumsOf(tokenStream(docs, Nil))
-
   private def simhashSumsOf(tok: DataFrame): DataFrame = {
     val h = md5(col("w"))
     val words = (0 until SimhashBits / 8).map(k =>
@@ -1103,7 +1100,7 @@ object Dedup {
     */
   def dedupYield(docs: DataFrame): DataFrame = {
     val f = docs.select(col("doc_id"), col("lang"),
-      md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("fp"),
+      TextAnalysis.fingerprint(col("text")).as("fp"),
       size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
     val keepers = f.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
     val kept = f.join(keepers, Seq("fp", "doc_id"), "left_semi")
@@ -1188,12 +1185,12 @@ object Dedup {
     * already-checkpointed upstream member, so e.g. [[components]] never
     * re-runs the signature join. Row-identical to the operators' inline
     * derivations at the suite's default parameters (DedupSpec pins each).
+    * Each checkpoint goes to `own`, the [[Memo]] entry's, so invalidation
+    * releases them.
     */
-  final class DedupArtifacts private[graft] (docs: DataFrame) {
-    private val made = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    private def ck(df: DataFrame): DataFrame = synchronized {
-      val c = df.localCheckpoint(); made += c; c
-    }
+  final class DedupArtifacts private[graft] (
+      docs: DataFrame, own: DataFrame => DataFrame) {
+    private def ck(df: DataFrame): DataFrame = own(df.localCheckpoint())
 
     /** Lang-carrying token stream `(doc_id, lang, pos, w)`, clustered by
       * doc_id and checkpointed — the regex split (the family's documented
@@ -1223,38 +1220,17 @@ object Dedup {
     /** Blocked n-gram Jaccard pairs at the suite default (minJaccard 0.2),
       * checkpointed. */
     lazy val ngramPairs: DataFrame = ck(ngramJaccardPairsOf(tok, 0.2))
-
-    private[ops] def release(): Unit = synchronized {
-      made.foreach(Memo.unpersistCheckpoint)
-      made.clear()
-    }
   }
 
-  /** The dedup artifacts for `inputKey`, built at most once per
-    * (session, inputKey) — [[Graph.interactionGraphFor]]'s staleness
-    * contract verbatim: `inputKey` must fingerprint the INPUT DATA; a
-    * caller that mutates the corpus under the same key must call
-    * [[invalidateDedupArtifacts]].
+  /** The dedup artifacts for `inputKey` (the caller's corpus directory),
+    * built at most once per session: a [[Memo]] entry of the `dedup`
+    * family, under its staleness contract.
     */
   def dedupArtifactsFor(
       inputKey: String, docs: => DataFrame): DedupArtifacts = {
     val d = docs
-    Memo.pruneStopped(dedupCache,
-      (_: (org.apache.spark.sql.SparkSession, String))._1)
-    dedupCache.getOrElseUpdate((d.sparkSession, inputKey),
-      new DedupArtifacts(d))
+    Memo(d.sparkSession, "dedup", inputKey)(new DedupArtifacts(d, _))
   }
-
-  /** Drops every memoized dedup artifact and releases their checkpoint
-    * storage (see [[dedupArtifactsFor]]'s staleness contract).
-    */
-  def invalidateDedupArtifacts(): Unit = {
-    dedupCache.values.foreach(_.release())
-    dedupCache.clear()
-  }
-
-  private val dedupCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DedupArtifacts]
 
   def pairSetAgreement(methods: Seq[(String, DataFrame)]): DataFrame = {
     require(methods.size >= 2, "pairSetAgreement: need at least 2 methods")

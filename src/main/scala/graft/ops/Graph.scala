@@ -21,7 +21,7 @@ object Graph {
     * and any other engine's sum over the same integers — produces the
     * IDENTICAL bit pattern. Floating-point PageRank cannot make that
     * cross-engine promise (sum order differs), which is why the oracle
-    * certification of [[pageRank]] is exact, not tolerance-based.
+    * certification of [[pageRankOf]] is exact, not tolerance-based.
     */
   val RankScale: Long = 1000000000000L
 
@@ -43,12 +43,14 @@ object Graph {
     * and each piece is localCheckpointed on first use so all later
     * consumers fan out from materialized bytes. Row-identical to the
     * operators' pre-r10 inline derivations (GraphSpec pins this).
+    *
+    * `own` receives each checkpoint: [[interactionGraphFor]] passes the
+    * [[Memo]] entry's, so invalidation releases them; a graph built
+    * outside the store keeps them until the session ends.
     */
-  final class InteractionGraph private[graft] (lineitem: DataFrame) {
-    private val made = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    private def ck(df: DataFrame): DataFrame = synchronized {
-      val c = df.localCheckpoint(); made += c; c
-    }
+  final class InteractionGraph private[graft] (
+      lineitem: DataFrame, own: DataFrame => DataFrame = identity) {
+    private def ck(df: DataFrame): DataFrame = own(df.localCheckpoint())
 
     /** Deduplicated symmetric edge list `(u, v)` — suppliers at
       * `2·l_suppkey`, parts at `2·l_partkey+1` (disjoint id spaces), both
@@ -116,72 +118,44 @@ object Graph {
       lpaMemo.getOrElseUpdate(rounds, ck(Graph.lpaLabelsOf(this, rounds)))
     }
     private val lpaMemo = scala.collection.mutable.Map.empty[Int, DataFrame]
-
-    /** Release every checkpoint this artifact materialized (storage
-      * hygiene for [[Graph.invalidateInteractionGraphs]]).
-      */
-    private[ops] def release(): Unit = synchronized {
-      made.foreach(Memo.unpersistCheckpoint)
-      made.clear()
-      lpaMemo.clear()
-    }
   }
 
-  /** The interaction-graph artifact for `inputKey`, built at most once per
-    * (session, inputKey) — [[Recommend.recommendationsFor]]'s staleness
-    * contract verbatim: `inputKey` must fingerprint the INPUT DATA (the
-    * caller's table directory); a caller that mutates the tables under
-    * the same key must call [[invalidateInteractionGraphs]]. Entries are
-    * keyed by the session object (never leaked across sessions) and
-    * entries of stopped sessions are pruned on every access.
+  /** The interaction-graph artifact for `inputKey` (the caller's table
+    * directory), built at most once per session: a [[Memo]] entry of the
+    * `graph` family, under its staleness contract.
     */
   def interactionGraphFor(
       inputKey: String, lineitem: => DataFrame): InteractionGraph = {
     val li = lineitem
-    Memo.pruneStopped(graphCache, (_: (org.apache.spark.sql.SparkSession, String))._1)
-    graphCache.getOrElseUpdate((li.sparkSession, inputKey),
-      new InteractionGraph(li))
+    Memo(li.sparkSession, "graph", inputKey)(new InteractionGraph(li, _))
   }
 
-  /** Drops every memoized interaction graph and releases their
-    * checkpoint storage (see [[interactionGraphFor]]'s staleness
-    * contract).
+  /** Drops every memoized interaction graph and co-purchase edge list
+    * and releases their checkpoint storage (the `graph` family of
+    * [[Memo]]).
     */
-  def invalidateInteractionGraphs(): Unit = {
-    graphCache.values.foreach(_.release())
-    graphCache.clear()
-    coPurchaseCache.values.foreach(Memo.unpersistCheckpoint)
-    coPurchaseCache.clear()
-  }
-
-  private val graphCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), InteractionGraph]
+  def invalidateInteractionGraphs(): Unit = Memo.invalidate("graph")
 
   /** [[coPurchaseEdges]] as a build-once artifact, memoized per
     * (session, inputKey, maxBasketSize, minSupport) — the strong-tie
     * census family (triangles, local clustering, link prediction) shares
     * one (1000, 2) edge build instead of re-running the basket self-join
-    * per query. Same staleness contract as [[interactionGraphFor]].
+    * per query. A [[Memo]] entry of the `graph` family, so
+    * [[invalidateInteractionGraphs]] drops it too.
     */
   def coPurchaseEdgesFor(
       inputKey: String, lineitem: => DataFrame,
       maxBasketSize: Int = 1000, minSupport: Int = 1): DataFrame = {
     val li = lineitem
-    Memo.pruneStopped(coPurchaseCache,
-      (_: (org.apache.spark.sql.SparkSession, String, Int, Int))._1)
-    coPurchaseCache.getOrElseUpdate(
-      (li.sparkSession, inputKey, maxBasketSize, minSupport),
-      coPurchaseEdges(li, maxBasketSize, minSupport))
+    Memo(li.sparkSession, "graph", (inputKey, maxBasketSize, minSupport))(
+      own => own(coPurchaseEdges(li, maxBasketSize, minSupport)))
   }
 
-  private val coPurchaseCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), DataFrame]
-
-  /** PageRank over the bipartite supplier↔part interaction graph implied
-    * by `lineitem`, run for `iters` synchronous iterations at damping
-    * 0.85, in 1e-12 fixed point. Returns the `topK` nodes by rank:
-    * `(node, rank)` where suppliers map to `2·l_suppkey` and parts to
-    * `2·l_partkey + 1` (disjoint id spaces).
+  /** PageRank over the bipartite supplier↔part interaction graph `g`
+    * (typically the memoized [[interactionGraphFor]] artifact), run for
+    * `iters` synchronous iterations at damping 0.85, in 1e-12 fixed point.
+    * Returns the `topK` nodes by rank: `(node, rank)` where suppliers map
+    * to `2·l_suppkey` and parts to `2·l_partkey + 1` (disjoint id spaces).
     *
     * Undirected edges (both directions materialized) mean every node has
     * in-degree ≥ 1, so no dangling-mass correction is needed: each
@@ -198,11 +172,6 @@ object Graph {
     * O(distinct dst per partition) before the exchange. Driver state is
     * one `count()` (node count) — no collect of data-sized state.
     */
-  def pageRank(
-      lineitem: DataFrame, iters: Int = 3, topK: Int = 20): DataFrame =
-    pageRankOf(new InteractionGraph(lineitem), iters, topK)
-
-  /** [[pageRank]] over a prebuilt (typically memoized) artifact. */
   def pageRankOf(
       g: InteractionGraph, iters: Int = 3, topK: Int = 20): DataFrame = {
     val withDeg = g.withDeg
@@ -225,28 +194,19 @@ object Graph {
   }
 
   /** Personalized (topic-sensitive) PageRank: identical fixed-point
-    * integer arithmetic to [[pageRank]], but the restart mass goes ONLY
+    * integer arithmetic to [[pageRankOf]], but the restart mass goes ONLY
     * to a seed set instead of uniformly — ranks then measure proximity
     * to the topic, the random-walk-with-restart scoring behind
     * related-item retrieval and seed-expansion labeling. Seeds here are
     * every `seedEvery`-th part node (deterministic, so the DuckDB
     * unrolled-CTE oracle reproduces the walk bit-for-bit).
     *
-    * Same scale shape as [[pageRank]] (checkpointed edge partitions,
+    * Same scale shape as [[pageRankOf]] (checkpointed edge partitions,
     * one rank-table shuffle per iteration) with one difference: the
     * rank table stays SPARSE — only nodes reached by the walk carry
     * rows, so early iterations move |frontier| rows, not |V|. The
     * restart term attaches by a full-outer join against the (small)
     * seed table so an unreached seed still holds its restart mass.
-    */
-  def personalizedPageRank(
-      lineitem: DataFrame, seedEvery: Int = 50,
-      iters: Int = 3, topK: Int = 20): DataFrame =
-    personalizedPageRankOf(new InteractionGraph(lineitem),
-      seedEvery, iters, topK)
-
-  /** [[personalizedPageRank]] over a prebuilt (typically memoized)
-    * artifact.
     */
   def personalizedPageRankOf(
       g: InteractionGraph, seedEvery: Int = 50,
@@ -284,7 +244,7 @@ object Graph {
     * sampling walks from it.
     *
     * Scale shape: the edge list is deduplicated, hash-partitioned once
-    * and localCheckpointed ([[pageRank]]'s discipline); each of the
+    * and localCheckpointed ([[pageRankOf]]'s discipline); each of the
     * `maxDepth` rounds joins the CURRENT frontier (nodes first reached
     * last round — never the full distance table) against those
     * materialized partitions, then min-merges into the distance table.
@@ -294,11 +254,6 @@ object Graph {
     * enumerating rendering (the naive recursive join) explodes
     * combinatorially.
     */
-  def bfsDistances(
-      lineitem: DataFrame, seedEvery: Int = 10, maxDepth: Int = 3): DataFrame =
-    bfsDistancesOf(new InteractionGraph(lineitem), seedEvery, maxDepth)
-
-  /** [[bfsDistances]] over a prebuilt (typically memoized) artifact. */
   def bfsDistancesOf(
       g: InteractionGraph, seedEvery: Int = 10, maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 6,
@@ -325,11 +280,13 @@ object Graph {
   }
 
   /** The deduplicated co-purchase edge list (parts adjacent iff at least
-    * `minSupport` baskets hold both) with the mega-basket guard — shared
-    * by [[triangleStats]] and [[degreeStats]]. localCheckpointed: every
-    * consumer fans out from the materialized partitions.
+    * `minSupport` baskets hold both) with the mega-basket guard — the
+    * input of [[triangleStatsOf]], [[localClusteringOf]],
+    * [[degreeStatsOf]] and [[linkPredictionOf]], memoized by
+    * [[coPurchaseEdgesFor]]. localCheckpointed: every consumer fans out
+    * from the materialized partitions.
     */
-  private[ops] def coPurchaseEdges(
+  private[graft] def coPurchaseEdges(
       lineitem: DataFrame, maxBasketSize: Int,
       minSupport: Int = 1): DataFrame = {
     val items = lineitem
@@ -355,8 +312,10 @@ object Graph {
     deduped.localCheckpoint()
   }
 
-  /** Triangle census of the co-purchase graph implied by `lineitem`
-    * (parts are adjacent iff some basket contains both): one row of
+  /** Triangle census of the co-purchase graph `edges` (a
+    * [[coPurchaseEdges]] list, typically the memoized
+    * [[coPurchaseEdgesFor]] build: parts are adjacent iff some basket
+    * contains both): one row of
     * `(n_nodes, n_edges, n_triangles, clustering)` where clustering is
     * the global coefficient 3·triangles / wedges.
     *
@@ -385,8 +344,8 @@ object Graph {
     * [[Association.basketPairs]]. Final stats are 1-row aggregates
     * (cross joins of 1-row frames, PlanSweep-reviewed).
     *
-    * `minSupport` restricts the census to edges co-purchased in at least
-    * that many baskets. The default 1 is the exact full census; 2+ is the
+    * The edge list's `minSupport` restricts the census to edges
+    * co-purchased in at least that many baskets. The default 1 is the exact full census; 2+ is the
     * "strong tie" census — the noise-pruned variant a recommender or
     * fraud-ring analysis actually wants (a single shared basket between
     * two random popular parts is coincidence, not structure). The prune
@@ -395,14 +354,6 @@ object Graph {
     * 3.6 k of 1.2 M edges and the wedge volume drops 5 orders of
     * magnitude, which is what makes it the bench-scale rendering while
     * the exact census stays the spec-tested reference.
-    */
-  def triangleStats(
-      lineitem: DataFrame, maxBasketSize: Int = 1000,
-      minSupport: Int = 1): DataFrame =
-    triangleStatsOf(coPurchaseEdges(lineitem, maxBasketSize, minSupport))
-
-  /** [[triangleStats]] over a prebuilt (typically memoized via
-    * [[coPurchaseEdgesFor]]) co-purchase edge list.
     */
   def triangleStatsOf(edges: DataFrame): DataFrame = {
     // node count + wedge denominator (orientedTriangles re-derives its
@@ -427,10 +378,10 @@ object Graph {
 
   /** Every triangle of the undirected `edges` graph exactly once, as
     * (a, b, c): a is the lowest-(degree, id)-ranked vertex, b and c its
-    * rank-ordered out-neighbors. [[triangleStats]]'s degree-oriented
+    * rank-ordered out-neighbors. [[triangleStatsOf]]'s degree-oriented
     * wedge enumeration (see that scaladoc for the O(m^1.5) rationale),
     * factored so the global census and the per-node census
-    * ([[localClustering]]) ride one implementation. The closing-edge
+    * ([[localClusteringOf]]) ride one implementation. The closing-edge
     * probe is an INNER join against the unique closing-edge keys —
     * set-equivalent to the previous semi-join (the edge list is
     * distinct), but it lets the wedge apex ride along instead of being
@@ -493,25 +444,19 @@ object Graph {
   /** Per-node local clustering coefficient of the strong-tie co-purchase
     * graph: cc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) — how close each
     * node's neighborhood is to a clique, THE per-node community-structure
-    * signal (Watts–Strogatz), where [[triangleStats]] reports only the
+    * signal (Watts–Strogatz), where [[triangleStatsOf]] reports only the
     * global mean. Top `topK` by coefficient (node-id tiebreak), over
     * nodes with deg ≥ 2 (cc undefined below).
     *
     * Exactness: triangle and degree counts are integers; the coefficient
     * presents through the exact fixed-point ratio (never round(double)).
-    * Scale: identical bounds to [[triangleStats]] — O(m^1.5) wedge work
+    * Scale: identical bounds to [[triangleStatsOf]] — O(m^1.5) wedge work
     * under degree orientation, Bloom-prefiltered probe — plus one
     * O(triangles) vertex-unpivot aggregate; the `minSupport` strong-tie
     * prune collapses wedge volume before any of it.
-    */
-  def localClustering(
-      lineitem: DataFrame, maxBasketSize: Int = 1000, minSupport: Int = 2,
-      topK: Int = 20): DataFrame =
-    localClusteringOf(
-      coPurchaseEdges(lineitem, maxBasketSize, minSupport), topK)
-
-  /** [[localClustering]] over a prebuilt (typically memoized via
-    * [[coPurchaseEdgesFor]]) co-purchase edge list.
+    *
+    * `edges` is a [[coPurchaseEdges]] list, typically the memoized
+    * [[coPurchaseEdgesFor]] build at `minSupport` 2.
     */
   def localClusteringOf(edges: DataFrame, topK: Int = 20): DataFrame = {
     val deg = edges.select(col("u").as("node"))
@@ -542,14 +487,9 @@ object Graph {
     * Degrees re-aggregate from the edge list (two exchanges over edges);
     * the histogram and the Hill sum are both O(distinct degrees); alpha
     * attaches as a 1-row broadcast.
-    */
-  def degreeStats(
-      lineitem: DataFrame, dMin: Int = 10,
-      maxBasketSize: Int = 1000): DataFrame =
-    degreeStatsOf(coPurchaseEdges(lineitem, maxBasketSize), dMin)
-
-  /** [[degreeStats]] over a prebuilt (typically memoized via
-    * [[coPurchaseEdgesFor]]) co-purchase edge list.
+    *
+    * `edges` is a [[coPurchaseEdges]] list, typically the memoized
+    * [[coPurchaseEdgesFor]] build.
     */
   def degreeStatsOf(edges: DataFrame, dMin: Int = 10): DataFrame = {
     val deg = edges.select(col("u").as("n"))
@@ -585,13 +525,8 @@ object Graph {
     * and one per-node argmax window whose partitions are a node's
     * distinct neighbor-label count (bounded by degree, never global).
     * Only the O(nodes) label table moves between rounds.
-    */
-  def labelPropagation(
-      lineitem: DataFrame, rounds: Int = 2, maxRounds: Int = 8): DataFrame =
-    labelPropagationOf(new InteractionGraph(lineitem), rounds, maxRounds)
-
-  /** [[labelPropagation]] over a prebuilt (typically memoized) artifact —
-    * the label assignment itself comes from the artifact's per-rounds
+    *
+    * The label assignment itself comes from the artifact's per-rounds
     * memo, shared with [[communityModularityOf]].
     */
   def labelPropagationOf(
@@ -603,15 +538,6 @@ object Graph {
       .groupBy("community_size").agg(count(lit(1)).as("n_communities"))
       .orderBy("community_size")
   }
-
-  /** Per-node community labels after `rounds` synchronous LPA rounds —
-    * the raw assignment [[labelPropagation]] histograms and
-    * [[communityModularity]] scores. See [[labelPropagation]] for the
-    * tie rule and scale shape.
-    */
-  private[graft] def lpaLabels(
-      lineitem: DataFrame, rounds: Int, maxRounds: Int = 8): DataFrame =
-    lpaLabelsOf(new InteractionGraph(lineitem), rounds, maxRounds)
 
   /** The raw LPA label loop over an artifact's edges — called by
     * [[InteractionGraph.lpaLabels]], which checkpoints and memoizes the
@@ -656,15 +582,10 @@ object Graph {
     * Plan: two label attachments onto the edge list (the degree table
     * rides the same label join), one O(communities) aggregate each,
     * then 1-row composition (reviewed broadcasts).
-    */
-  def communityModularity(
-      lineitem: DataFrame, rounds: Int = 2): DataFrame =
-    communityModularityOf(new InteractionGraph(lineitem), rounds)
-
-  /** [[communityModularity]] over a prebuilt (typically memoized)
-    * artifact — edges, degrees AND the LPA assignment all come from the
-    * artifact, so scoring the communities [[labelPropagationOf]] found
-    * re-runs zero label rounds.
+    *
+    * Edges, degrees AND the LPA assignment all come from the artifact, so
+    * scoring the communities [[labelPropagationOf]] found re-runs zero
+    * label rounds.
     */
   def communityModularityOf(
       g: InteractionGraph, rounds: Int = 2): DataFrame = {
@@ -691,7 +612,7 @@ object Graph {
   /** Weighted multi-source shortest paths — `rounds` synchronous
     * Bellman-Ford relaxations (min-plus over exact BIGINT weights, so
     * every step is associative, order-free, and engine-identical; the
-    * weighted twin of [[bfsDistances]], whose hop metric can't prefer a
+    * weighted twin of [[bfsDistancesOf]], whose hop metric can't prefer a
     * longer-but-lighter path). Edge weight = per-pair min quantity —
     * deterministic and integral. Distances are exact up to `rounds`
     * hops (the standard bounded-relaxation contract; paths longer than
@@ -704,15 +625,8 @@ object Graph {
     * Scale: per round one keyed edge⋈distance join over checkpointed
     * edge partitions + one min-combine aggregate whose shuffle carries
     * O(reached nodes) — never O(paths); the pageRank/BFS family shape.
-    */
-  def weightedShortestPaths(
-      lineitem: DataFrame, rounds: Int = 3, topK: Int = 20,
-      maxRounds: Int = 8): DataFrame =
-    weightedShortestPathsOf(new InteractionGraph(lineitem), rounds, topK,
-      maxRounds)
-
-  /** [[weightedShortestPaths]] over a prebuilt (typically memoized)
-    * artifact: the weighted edge list is the artifact's
+    *
+    * The weighted edge list is the artifact's
     * [[InteractionGraph.weightedEdges]] member, so the memo-sharing query
     * (`graph_sssp`) sheds its per-query edge derivation exactly as
     * `graph_hits` did in r10 — the last graph operator not riding the
@@ -739,7 +653,7 @@ object Graph {
   /** HITS (Kleinberg hubs & authorities) over the directed supplier→part
     * edge list: auth(p) = Σ hub(s) over in-edges, hub(s) = Σ auth(p) over
     * out-edges, L1-normalized each half-step — in 1e-6 INTEGER fixed
-    * point, the same cross-engine-exact discipline as [[pageRank]]
+    * point, the same cross-engine-exact discipline as [[pageRankOf]]
     * (truncating integer division is identical everywhere; a float HITS
     * could only be tolerance-checked). The sf10 (100×) rung killed the
     * original 1e-6 rendering twice, so the numeric budget is now
@@ -747,7 +661,7 @@ object Graph {
     *  - UNDERFLOW: the fixed-point scale must exceed the node count —
     *    at 2.1M parts every authority share fell below 1e-6, truncated
     *    to 0, and the next half-step divided by zero. Scale is 1e-12
-    *    (the [[pageRank]] convention): safe to a trillion nodes.
+    *    (the [[pageRankOf]] convention): safe to a trillion nodes.
     *  - OVERFLOW: the normalization product raw·10¹² runs in
     *    DECIMAL(38,0) (DuckDB: HUGEINT); seeds are UNSCALED (hub₀ = 1 —
     *    the first normalization rescales anyway), so the BIGINT totals
@@ -761,14 +675,11 @@ object Graph {
     * table) + one partial-aggregated groupBy; the L1 total is a 1-row
     * broadcast. The static edge list is deduplicated and checkpointed
     * once; only score tables move between iterations.
-    */
-  def hits(lineitem: DataFrame, iters: Int = 2, topK: Int = 10): DataFrame =
-    hitsOf(new InteractionGraph(lineitem), iters, topK)
-
-  /** [[hits]] over a prebuilt (typically memoized) artifact: the directed
-    * supplier→part edge list is a PROJECTION of the artifact's symmetric
-    * edges (keep the even-u orientation, shift the ids back), so the
-    * memo-sharing query never re-scans or re-deduplicates lineitem.
+    *
+    * The directed supplier→part edge list is a PROJECTION of the
+    * artifact's symmetric edges (keep the even-u orientation, shift the
+    * ids back), so the memo-sharing query never re-scans or
+    * re-deduplicates lineitem.
     */
   def hitsOf(
       g: InteractionGraph, iters: Int = 2, topK: Int = 10): DataFrame = {
@@ -837,10 +748,6 @@ object Graph {
     * Plan: one degree aggregate + two broadcast-sized degree joins over
     * the once-materialized edge list + one scalar aggregate.
     */
-  def assortativity(lineitem: DataFrame): DataFrame =
-    assortativityOf(new InteractionGraph(lineitem))
-
-  /** [[assortativity]] over a prebuilt (typically memoized) artifact. */
   def assortativityOf(g: InteractionGraph): DataFrame = {
     val edges = g.edges
     val deg = g.deg.select(col("u"), col("deg").as("d"))
@@ -868,7 +775,7 @@ object Graph {
     * co-purchase graph: the `topK` NON-adjacent part pairs ranked by
     * |N(u)∩N(v)| / |N(u)∪N(v)| among pairs sharing at least `minCommon`
     * neighbors — "these two parts are bought with the same things but
-    * never together", the complement of [[triangleStats]] (which counts
+    * never together", the complement of [[triangleStatsOf]] (which counts
     * the wedges that DID close; this ranks the ones that didn't). The
     * standard recommender/negative-mining primitive.
     *
@@ -884,15 +791,9 @@ object Graph {
     * `minCommon` prunes the candidate table before the degree joins.
     * The existing-edge exclusion is one anti-join on the deduped edge
     * list.
-    */
-  def linkPrediction(
-      lineitem: DataFrame, maxBasketSize: Int = 1000, minSupport: Int = 2,
-      minCommon: Int = 1, topK: Int = 20): DataFrame =
-    linkPredictionOf(coPurchaseEdges(lineitem, maxBasketSize, minSupport),
-      minCommon, topK)
-
-  /** [[linkPrediction]] over a prebuilt (typically memoized via
-    * [[coPurchaseEdgesFor]]) co-purchase edge list.
+    *
+    * `edges` is a [[coPurchaseEdges]] list, typically the memoized
+    * [[coPurchaseEdgesFor]] build at `minSupport` 2.
     */
   def linkPredictionOf(
       edges: DataFrame, minCommon: Int = 1, topK: Int = 20): DataFrame = {
@@ -935,15 +836,6 @@ object Graph {
     * level is one join frontier→edges plus one min-dist groupBy, edges
     * localCheckpointed once and re-read; `maxDepth` ≤ 6 keeps the
     * frontier-expansion count bounded and loud.
-    */
-  def harmonicCentrality(
-      lineitem: DataFrame, seedEvery: Int = 10, seedCount: Int = 8,
-      maxDepth: Int = 3): DataFrame =
-    harmonicCentralityOf(new InteractionGraph(lineitem),
-      seedEvery, seedCount, maxDepth)
-
-  /** [[harmonicCentrality]] over a prebuilt (typically memoized)
-    * artifact.
     */
   def harmonicCentralityOf(
       g: InteractionGraph, seedEvery: Int = 10, seedCount: Int = 8,
@@ -1081,11 +973,6 @@ object Graph {
     * can never ship a wrong census. Σd over survivors = 2·|core edges|
     * (d is the induced degree), so the edge count needs no extra join.
     */
-  def kCore(
-      lineitem: DataFrame, k: Int = 16, rounds: Int = 6): DataFrame =
-    kCoreOf(new InteractionGraph(lineitem), k, rounds)
-
-  /** [[kCore]] over a prebuilt (typically memoized) artifact. */
   def kCoreOf(
       g: InteractionGraph, k: Int = 16, rounds: Int = 6): DataFrame = {
     require(k >= 2, s"kCore: k=$k below 2 (k=1 keeps every non-isolate)")

@@ -137,39 +137,17 @@ object Recommend {
     * is the right weight here because the artifact is output-, not
     * corpus-, sized).
     *
-    * `inputKey` must fingerprint the INPUT DATA (the caller's table
-    * directory); a caller that mutates the tables under the same key
-    * must call [[invalidateRecommendations]]. Entries are keyed by the
-    * session object, so a new session never sees another session's
-    * artifact.
+    * A [[Memo]] entry of the `rec` family, keyed by (session, inputKey,
+    * topN, neighborsPerItem) under its staleness contract: `inputKey` is
+    * the caller's table directory.
     */
   def recommendationsFor(
       inputKey: String, lineitem: => DataFrame, orders: => DataFrame,
       topN: Int = 3, neighborsPerItem: Int = 10): DataFrame = {
     val li = lineitem
-    val key = (li.sparkSession, inputKey, topN, neighborsPerItem)
-    // entries of stopped sessions are dropped on every access so a
-    // long-lived process cycling sessions can't accumulate them (their
-    // checkpoint blocks died with the context; the memo key was the
-    // last strong reference pinning the session object)
-    Memo.pruneStopped(recCache,
-      (_: (org.apache.spark.sql.SparkSession, String, Int, Int))._1)
-    recCache.getOrElseUpdate(key,
-      recommendItems(li, orders, topN, neighborsPerItem).localCheckpoint())
+    Memo(li.sparkSession, "rec", (inputKey, topN, neighborsPerItem))(own =>
+      own(recommendItems(li, orders, topN, neighborsPerItem).localCheckpoint()))
   }
-
-  /** Drops every memoized recommendation artifact (see
-    * [[recommendationsFor]]'s staleness contract) and eagerly releases
-    * their checkpoint storage — entries cleared under a LIVE session
-    * must not strand blocks in executor storage until context shutdown.
-    */
-  def invalidateRecommendations(): Unit = {
-    recCache.values.foreach(Memo.unpersistCheckpoint)
-    recCache.clear()
-  }
-
-  private val recCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), DataFrame]
 
   /** Coverage/diversity audit of [[recommendItems]]'s output — the
     * recommender-health numbers a production system alarms on: what

@@ -1,13 +1,13 @@
 package graft.sources
 
-/** Deterministic `.grid` fixture for the end-to-end source oracle
-  * (`gridded_ingest` in [[graft.SparkEntry]]): every cell value is a pure
+/** Deterministic gridded fixture for the end-to-end source oracles
+  * (the `gridded_ingest*` queries in [[graft.SparkEntry]]): every cell value is a pure
   * closed-form function of its (time, lead, y, x) indices using only exact
   * integer arithmetic and single double divisions, so an independent engine
   * (the DuckDB oracle) can regenerate the identical values from
   * `generate_series` without ever touching the binary file — which is the
-  * point: the Spark side must prove that GridFile.write -> DSv2 read ->
-  * Ingest.load reproduces the mathematically-defined content exactly.
+  * point: the Spark side must prove that the NetCDF / HDF5 write -> DSv2
+  * read -> Ingest.load reproduces the mathematically-defined content exactly.
   *
   * Shape mirrors a small IceNet drop (SURVEY.md §1.1): 2 generation dates x
   * 3 leadtimes x 6 yc x 8 xc, with NaN cells (masked/land, dropped by P3)
@@ -48,21 +48,11 @@ object GridFixture {
     out
   }
 
-  /** Writes the fixture once per path (idempotent; the oracle query may run
-    * several times per session — bench warmup + timed passes). The write
-    * is atomic (temp file + rename): existence-as-done caching would
-    * otherwise trust a truncated file left by a crashed writer forever.
-    */
-  def ensureWritten(path: String): String =
-    ensureWith(path) { tmp =>
-      GridFile.write(tmp, TimesMicros, Leadtimes, Yc, Xc,
-        flat(meanAt), flat(stddevAt))
-    }
-
-  /** Same logical content as a REAL NetCDF classic file: CDF-1 with `time`
-    * as the unlimited record dimension and NC_DOUBLE data — decodes to the
-    * bit-identical DataFrame as the `.grid` fixture, so the `gridded_ingest`
-    * oracle proves the NetCDF byte path against DuckDB end to end.
+  /** The fixture as a REAL NetCDF classic file: CDF-1 with `time` as the
+    * unlimited record dimension and NC_DOUBLE data, so the
+    * `gridded_ingest` oracle proves the NetCDF byte path against DuckDB
+    * end to end. Written once per path (idempotent; the oracle query may
+    * run several times per session — bench warmup + timed passes).
     */
   def ensureWrittenNc(path: String): String =
     ensureWith(path) { tmp =>
@@ -143,6 +133,10 @@ object GridFixture {
         denseIndirectChild = true)
     }
 
+  /** Writes a fixture file once per path. The write is atomic (temp file
+    * + rename): existence-as-done caching would otherwise trust a
+    * truncated file left by a crashed writer forever.
+    */
   private def ensureWith(path: String)(write: String => Unit): String =
     synchronized {
       val f = new java.io.File(path)
@@ -157,9 +151,6 @@ object GridFixture {
     }
 
   /** Session-stable default locations (under java.io.tmpdir). */
-  def defaultPath: String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_grid_fixture_v1.grid").getAbsolutePath
   def defaultNcPath: String =
     new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_grid_fixture_v1.nc").getAbsolutePath

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.{col, concat_ws, count, lead, lit, posexplode}
-import graft.ops.Dedup
+import graft.ops.{Dedup, Memo}
 
 /** Dedup-operator specs beyond the DuckDB oracles: signature-level
   * properties and the skew guards that only show up on adversarial corpora
@@ -379,7 +379,7 @@ class DedupSpec extends SparkSpec {
 
   test("DedupArtifacts: every artifact member row-identical to its inline " +
     "derivation; memoized per (session, key); invalidation rebuilds") {
-    Dedup.invalidateDedupArtifacts()
+    Memo.invalidate()
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta", "en"),
       (2L, "alpha beta gamma delta epsilon zeta", "en"),
@@ -405,12 +405,12 @@ class DedupSpec extends SparkSpec {
     assert(rows(Dedup.keepBest(ranked, a.components)) ==
       rows(Dedup.keepBest(ranked, Dedup.connectedComponents(
         Dedup.minhashCandidates(docs)))))
-    // memo identity + staleness contract (Graph.interactionGraphFor's)
+    // memo identity + staleness contract (Memo's)
     assert(Dedup.dedupArtifactsFor("k1", docs.limit(0)) eq a)
     assert(!(Dedup.dedupArtifactsFor("k2", docs) eq a))
-    Dedup.invalidateDedupArtifacts()
+    Memo.invalidate()
     assert(!(Dedup.dedupArtifactsFor("k1", docs) eq a))
-    Dedup.invalidateDedupArtifacts()
+    Memo.invalidate()
   }
 
   test("pairSetAgreement: disjoint sets score zero, empty pair is NULL") {

@@ -35,7 +35,7 @@ class FixpointSpec extends SparkSpec {
     val users = Seq[(String, () => Any)](
       "ancestorClosure" -> (() => Hierarchy.ancestorClosure(chain).count()),
       "connectedComponents" -> (() => Dedup.connectedComponents(pairs).count()),
-      "kCore" -> (() => Graph.kCore(li, k = 2).collect()))
+      "kCore" -> (() => Graph.kCoreOf(new Graph.InteractionGraph(li), k = 2).collect()))
     for ((op, run) <- users) {
       val rounds = recounted(run())
       assert(rounds.map(_._1).toSet == Set(op))

@@ -19,7 +19,7 @@ class GlobalRowNumberSpec extends SparkSpec {
 
   test("ids equal the global-window row_number on a unique key") {
     val fast = GlobalRowNumber
-      .withGlobalRowNumber(df, "rid", Seq(col("k")), numParts = 4)
+      .withGlobalRowNumber(df, "rid", Seq(col("k")))
     val slow = df.withColumn("rid",
       row_number().over(Window.orderBy("k")).cast("long"))
     assert(fast.except(slow).isEmpty && slow.except(fast).isEmpty)
@@ -27,7 +27,7 @@ class GlobalRowNumberSpec extends SparkSpec {
 
   test("ids are dense, 1-based, and keep the input columns") {
     val out = GlobalRowNumber
-      .withGlobalRowNumber(df, "rid", Seq(col("k")), numParts = 4)
+      .withGlobalRowNumber(df, "rid", Seq(col("k")))
     assert(out.columns.toSeq == Seq("k", "payload", "rid"))
     val ids = out.select("rid").as[Long].collect().sorted
     assert(ids.toSeq == (1L to 1000L))
@@ -36,7 +36,7 @@ class GlobalRowNumberSpec extends SparkSpec {
   test("duplicate keys never straddle partitions: ids stay a valid dense ranking") {
     val dup = spark.range(1000).select((col("id") % 10).as("k")) // 100x each key
     val out = GlobalRowNumber
-      .withGlobalRowNumber(dup, "rid", Seq(col("k")), numParts = 4)
+      .withGlobalRowNumber(dup, "rid", Seq(col("k")))
       .select(col("k"), col("rid")).as[(Long, Long)].collect().sortBy(_._2)
     assert(out.map(_._2).toSeq == (1L to 1000L))
     // non-decreasing key along the id order = consistent with ORDER BY k
@@ -45,7 +45,7 @@ class GlobalRowNumberSpec extends SparkSpec {
 
   test("the sort is spread over the requested partitions, never one") {
     val out = GlobalRowNumber
-      .withGlobalRowNumber(df, "rid", Seq(col("k")), numParts = 4)
+      .withGlobalRowNumber(df, "rid", Seq(col("k")))
     assert(out.rdd.getNumPartitions == 4,
       "numbering must run on the range partitions, not a single-partition sort")
   }
@@ -60,7 +60,7 @@ class GlobalRowNumberSpec extends SparkSpec {
     val big = spark.range(20000).select(
       pmod(col("id") * 7919 + 13, lit(20000)).as("k"))
     val fast = GlobalRowNumber
-      .withGlobalRowNumber(big, "rid", Seq(col("k")), numParts = 4)
+      .withGlobalRowNumber(big, "rid", Seq(col("k")))
     val slow = big.withColumn("rid",
       row_number().over(Window.orderBy("k")).cast("long"))
     assert(fast.except(slow).isEmpty && slow.except(fast).isEmpty)
@@ -68,7 +68,7 @@ class GlobalRowNumberSpec extends SparkSpec {
 
   test("empty input yields an empty, correctly-shaped result") {
     val out = GlobalRowNumber.withGlobalRowNumber(
-      df.filter(col("k") < 0), "rid", Seq(col("k")), numParts = 4)
+      df.filter(col("k") < 0), "rid", Seq(col("k")))
     assert(out.columns.contains("rid") && out.isEmpty)
   }
 }

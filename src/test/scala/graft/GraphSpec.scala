@@ -15,6 +15,10 @@ class GraphSpec extends SparkSpec {
     (1L, 1L), (1L, 2L), (2L, 2L), (1L, 2L) // duplicate edge collapses
   ).toDF("l_suppkey", "l_partkey")
 
+  /** A fresh, unshared interaction graph over `lineitem`. */
+  private def graph(lineitem: org.apache.spark.sql.DataFrame) =
+    new Graph.InteractionGraph(lineitem)
+
   /** Independent fixed-point reference (driver-side BigInt-free: longs are
     * exact here) mirroring the operator's arithmetic spec, not its plan.
     */
@@ -36,7 +40,7 @@ class GraphSpec extends SparkSpec {
 
   test("tiny graph matches the independent fixed-point reference") {
     val expected = referenceRanks(Set((2L, 3L), (2L, 5L), (4L, 5L)), 3)
-    val got = Graph.pageRank(tiny, iters = 3, topK = 10)
+    val got = Graph.pageRankOf(graph(tiny), iters = 3, topK = 10)
       .as[(Long, Long)].collect().toMap
     assert(got == expected)
     // structural sanity: part 5 (two suppliers) outranks part 3 (one)
@@ -44,15 +48,15 @@ class GraphSpec extends SparkSpec {
   }
 
   test("identical output under different parallelism") {
-    val a = Graph.pageRank(tiny.repartition(1), iters = 3, topK = 10)
+    val a = Graph.pageRankOf(graph(tiny.repartition(1)), iters = 3, topK = 10)
       .as[(Long, Long)].collect().toSet
-    val b = Graph.pageRank(tiny.repartition(7), iters = 3, topK = 10)
+    val b = Graph.pageRankOf(graph(tiny.repartition(7)), iters = 3, topK = 10)
       .as[(Long, Long)].collect().toSet
     assert(a == b)
   }
 
   test("rank mass is conserved up to truncation loss") {
-    val ranks = Graph.pageRank(tiny, iters = 3, topK = 10)
+    val ranks = Graph.pageRankOf(graph(tiny), iters = 3, topK = 10)
       .as[(Long, Long)].collect()
     val total = ranks.map(_._2).sum
     // each division truncates < 1 unit per edge/node per iteration; with
@@ -88,7 +92,7 @@ class GraphSpec extends SparkSpec {
     ).toDF("l_orderkey", "l_partkey")
     val edges = Set((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L))
     val (n, tris, wedges) = bruteTriangles(edges)
-    val row = Graph.triangleStats(li)
+    val row = Graph.triangleStatsOf(Graph.coPurchaseEdges(li, 1000))
       .as[(Long, Long, Long, Double)].head()
     assert(row._1 == n)
     assert(row._2 == edges.size.toLong)
@@ -106,9 +110,9 @@ class GraphSpec extends SparkSpec {
     ).toDF("l_orderkey", "l_partkey")
     // edges: basket1 gives 12,13,23; basket2: 14; basket3: 24; basket4: 34
     // = K4 -> 4 triangles, 6 edges, clustering 1.0
-    val a = Graph.triangleStats(k4.repartition(1))
+    val a = Graph.triangleStatsOf(Graph.coPurchaseEdges(k4.repartition(1), 1000))
       .as[(Long, Long, Long, Double)].head()
-    val b = Graph.triangleStats(k4.repartition(5))
+    val b = Graph.triangleStatsOf(Graph.coPurchaseEdges(k4.repartition(5), 1000))
       .as[(Long, Long, Long, Double)].head()
     assert(a == b)
     assert(a._2 == 6L && a._3 == 4L)
@@ -124,10 +128,10 @@ class GraphSpec extends SparkSpec {
       (101L, 1L), (101L, 2L), (101L, 3L),
       (102L, 3L), (102L, 4L)
     ).toDF("l_orderkey", "l_partkey")
-    val strong = Graph.triangleStats(li, minSupport = 2)
+    val strong = Graph.triangleStatsOf(Graph.coPurchaseEdges(li, 1000, minSupport = 2))
       .as[(Long, Long, Long, Double)].head()
     assert(strong._1 == 3L && strong._2 == 3L && strong._3 == 1L)
-    val exact = Graph.triangleStats(li)
+    val exact = Graph.triangleStatsOf(Graph.coPurchaseEdges(li, 1000))
       .as[(Long, Long, Long, Double)].head()
     assert(exact._1 == 4L && exact._2 == 4L && exact._3 == 1L)
   }
@@ -135,7 +139,7 @@ class GraphSpec extends SparkSpec {
   test("mega-basket guard drops oversized baskets from the edge set") {
     val small = Seq((1L, 1L), (1L, 2L), (1L, 3L)).toDF("l_orderkey", "l_partkey")
     val mega = (1L to 60L).map(p => (9L, p)).toDF("l_orderkey", "l_partkey")
-    val capped = Graph.triangleStats(small.unionByName(mega), maxBasketSize = 10)
+    val capped = Graph.triangleStatsOf(Graph.coPurchaseEdges(small.unionByName(mega), maxBasketSize = 10))
       .as[(Long, Long, Long, Double)].head()
     assert(capped._2 == 3L && capped._3 == 1L) // only the small triangle
   }
@@ -147,7 +151,7 @@ class GraphSpec extends SparkSpec {
       (101L, 1L), (101L, 2L), // duplicate edge collapses
       (102L, 1L), (102L, 3L)
     ).toDF("l_orderkey", "l_partkey")
-    val got = Graph.degreeStats(li, dMin = 1)
+    val got = Graph.degreeStatsOf(Graph.coPurchaseEdges(li, 1000), dMin = 1)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got(1L)._1 == 2L && got(2L)._1 == 1L)
     // alpha = 1 + 3 / (2*ln(1) + 1*ln(2)) rounded to 6
@@ -156,7 +160,7 @@ class GraphSpec extends SparkSpec {
     assert(got(1L)._2 == expected)
 
     // tail entirely below dMin: alpha is NULL, never a divide-by-zero
-    val sparse = Graph.degreeStats(li, dMin = 10).collect()
+    val sparse = Graph.degreeStatsOf(Graph.coPurchaseEdges(li, 1000), dMin = 10).collect()
     assert(sparse.forall(_.isNullAt(2)))
   }
 
@@ -168,7 +172,7 @@ class GraphSpec extends SparkSpec {
     //   r2 = {2: 127.5e9, 101: 150e9 + 722.5e9 = 872.5e9}
     //   r3 = {2: 741.625e9, 101: 150e9 + 108.375e9 = 258.375e9}
     val li = Seq((1L, 50L)).toDF("l_suppkey", "l_partkey")
-    val got = Graph.personalizedPageRank(li, seedEvery = 50, iters = 3)
+    val got = Graph.personalizedPageRankOf(graph(li), seedEvery = 50, iters = 3)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(2L -> 741625000000L, 101L -> 258375000000L))
   }
@@ -177,7 +181,7 @@ class GraphSpec extends SparkSpec {
     "(sparse rank table)") {
     // component A: supp1—part50 (seeded); component B: supp2—part3 (not)
     val li = Seq((1L, 50L), (2L, 3L)).toDF("l_suppkey", "l_partkey")
-    val nodes = Graph.personalizedPageRank(li, seedEvery = 50, iters = 3)
+    val nodes = Graph.personalizedPageRankOf(graph(li), seedEvery = 50, iters = 3)
       .as[(Long, Long)].collect().toMap.keySet
     assert(nodes == Set(2L, 101L)) // B's nodes (4, 7) never enter the walk
   }
@@ -185,7 +189,7 @@ class GraphSpec extends SparkSpec {
   test("personalizedPageRank: empty seed set fails loudly") {
     val li = Seq((1L, 3L)).toDF("l_suppkey", "l_partkey")
     val e = intercept[IllegalArgumentException] {
-      Graph.personalizedPageRank(li, seedEvery = 50)
+      Graph.personalizedPageRankOf(graph(li), seedEvery = 50)
     }
     assert(e.getMessage.contains("seed"))
   }
@@ -197,7 +201,7 @@ class GraphSpec extends SparkSpec {
     // unreached component that must be absent entirely.
     val li = Seq((10L, 1L), (1L, 1L), (1L, 2L), (7L, 9L))
       .toDF("l_suppkey", "l_partkey")
-    val got = Graph.bfsDistances(li, seedEvery = 10, maxDepth = 3)
+    val got = Graph.bfsDistancesOf(graph(li), seedEvery = 10, maxDepth = 3)
       .as[(Long, Long)].collect().toMap
     // dist 0: {20}; dist 1: {3}; dist 2: {2}; dist 3: {5}
     assert(got == Map(0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
@@ -205,11 +209,11 @@ class GraphSpec extends SparkSpec {
 
   test("bfsDistances: depth cap truncates, never loops") {
     val li = Seq((10L, 1L), (1L, 1L), (1L, 2L)).toDF("l_suppkey", "l_partkey")
-    val got = Graph.bfsDistances(li, seedEvery = 10, maxDepth = 1)
+    val got = Graph.bfsDistancesOf(graph(li), seedEvery = 10, maxDepth = 1)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(0L -> 1L, 1L -> 1L)) // node 2 (hop 2) not reached
     val e = intercept[IllegalArgumentException] {
-      Graph.bfsDistances(li, maxDepth = 7)
+      Graph.bfsDistancesOf(graph(li), maxDepth = 7)
     }
     assert(e.getMessage.contains("maxDepth"))
   }
@@ -222,11 +226,11 @@ class GraphSpec extends SparkSpec {
     val li = Seq(
       (0L, 0L, 5.0), (0L, 1L, 1.0), (1L, 1L, 1.0)
     ).toDF("l_suppkey", "l_partkey", "l_quantity")
-    val got = Graph.weightedShortestPaths(li, rounds = 3)
+    val got = Graph.weightedShortestPathsOf(graph(li), rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((0L, 0L), (3L, 1L), (2L, 2L), (1L, 5L)))
     val e = intercept[IllegalArgumentException](
-      Graph.weightedShortestPaths(li, rounds = 99))
+      Graph.weightedShortestPathsOf(graph(li), rounds = 99))
     assert(e.getMessage.contains("rounds"))
   }
 
@@ -244,11 +248,11 @@ class GraphSpec extends SparkSpec {
     // node2 label 2, node3 label 3, node4 label 2 => sizes: label2 -> 2,
     // label3 -> 1 => census: (1,1),(2,1)
     val li = Seq((1L, 1L), (2L, 1L)).toDF("l_suppkey", "l_partkey")
-    val got = Graph.labelPropagation(li, rounds = 2)
+    val got = Graph.labelPropagationOf(graph(li), rounds = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((1L, 1L), (2L, 1L)))
     val e = intercept[IllegalArgumentException](
-      Graph.labelPropagation(li, rounds = 99))
+      Graph.labelPropagationOf(graph(li), rounds = 99))
     assert(e.getMessage.contains("rounds"))
   }
 
@@ -261,13 +265,13 @@ class GraphSpec extends SparkSpec {
     //     -> hub s1 = 600000000000 (exact), hub s2 = 400000000000 (exact)
     val li = Seq((1L, 101L), (1L, 102L), (2L, 101L))
       .toDF("l_suppkey", "l_partkey")
-    val got = Graph.hits(li, iters = 1, topK = 10)
+    val got = Graph.hitsOf(graph(li), iters = 1, topK = 10)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq == Seq(
       ("auth", 101L, 666666666666L), ("auth", 102L, 333333333333L),
       ("hub", 1L, 600000000000L), ("hub", 2L, 400000000000L)))
     // iters bound fails loudly
-    val e2 = intercept[IllegalArgumentException](Graph.hits(li, iters = 9))
+    val e2 = intercept[IllegalArgumentException](Graph.hitsOf(graph(li), iters = 9))
     assert(e2.getMessage.contains("iters"))
   }
 
@@ -277,11 +281,11 @@ class GraphSpec extends SparkSpec {
     // edge -> r = -1 by hand (n=6, sxy=18, sx=sy=12, sxx=syy=30)
     val star = Seq((1L, 1L), (1L, 2L), (1L, 3L))
       .toDF("l_suppkey", "l_partkey")
-    val got = Graph.assortativity(star)
+    val got = Graph.assortativityOf(graph(star))
       .as[(Long, Option[Double])].collect().head
     assert(got == ((3L, Some(-1.0))))
     val matching = Seq((1L, 1L), (2L, 2L)).toDF("l_suppkey", "l_partkey")
-    val g2 = Graph.assortativity(matching)
+    val g2 = Graph.assortativityOf(graph(matching))
       .as[(Long, Option[Double])].collect().head
     assert(g2 == ((2L, None)))
   }
@@ -294,7 +298,7 @@ class GraphSpec extends SparkSpec {
     val li = Seq((101L, 1L), (101L, 2L), (102L, 1L), (102L, 3L),
       (103L, 1L), (103L, 4L), (104L, 5L), (104L, 2L), (105L, 5L),
       (105L, 3L)).toDF("l_orderkey", "l_partkey")
-    val got = Graph.linkPrediction(li, minSupport = 1, minCommon = 2)
+    val got = Graph.linkPredictionOf(Graph.coPurchaseEdges(li, 1000, minSupport = 1), minCommon = 2)
       .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(
       (2L, 3L, 2L, 2L, 2L, 1.0),
@@ -302,11 +306,11 @@ class GraphSpec extends SparkSpec {
     // close the 2-3 edge: the pair leaves the candidate set
     val li2 = li.unionByName(
       Seq((106L, 2L), (106L, 3L)).toDF("l_orderkey", "l_partkey"))
-    val got2 = Graph.linkPrediction(li2, minSupport = 1, minCommon = 2)
+    val got2 = Graph.linkPredictionOf(Graph.coPurchaseEdges(li2, 1000, minSupport = 1), minCommon = 2)
       .select("u", "v").as[(Long, Long)].collect().toSeq
     assert(!got2.contains((2L, 3L)) && got2.contains((1L, 5L)))
     val e = intercept[IllegalArgumentException](
-      Graph.linkPrediction(li, minCommon = 0))
+      Graph.linkPredictionOf(Graph.coPurchaseEdges(li, 1000, minSupport = 2), minCommon = 0))
     assert(e.getMessage.contains("minCommon"))
   }
 
@@ -316,7 +320,7 @@ class GraphSpec extends SparkSpec {
     // core = {s1, s2, p1, p2}, induced edges = 4, share 4/5
     val li = Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 1L), (2L, 2L))
       .toDF("l_suppkey", "l_partkey")
-    val got = Graph.kCore(li, k = 2, rounds = 3)
+    val got = Graph.kCoreOf(graph(li), k = 2, rounds = 3)
       .select("k", "n_nodes", "n_core_nodes", "n_core_suppliers",
         "n_core_parts", "n_core_edges", "core_share")
       .as[(Long, Long, Long, Long, Long, Long, Double)].collect().head
@@ -327,7 +331,7 @@ class GraphSpec extends SparkSpec {
     // path s1 - p1 - s2 - p2: every round exposes new degree-1 ends
     val li = Seq((1L, 1L), (2L, 1L), (2L, 2L))
       .toDF("l_suppkey", "l_partkey")
-    val got = Graph.kCore(li, k = 2, rounds = 3)
+    val got = Graph.kCoreOf(graph(li), k = 2, rounds = 3)
       .select("n_core_nodes", "n_core_suppliers", "n_core_parts",
         "n_core_edges", "core_share")
       .as[(Long, Long, Long, Long, Double)].collect().head
@@ -339,9 +343,9 @@ class GraphSpec extends SparkSpec {
     val li = Seq((1L, 1L), (2L, 1L), (2L, 2L))
       .toDF("l_suppkey", "l_partkey")
     val e = intercept[IllegalArgumentException](
-      Graph.kCore(li, k = 2, rounds = 1))
+      Graph.kCoreOf(graph(li), k = 2, rounds = 1))
     assert(e.getMessage.contains("not converged"))
-    val e2 = intercept[IllegalArgumentException](Graph.kCore(li, k = 1))
+    val e2 = intercept[IllegalArgumentException](Graph.kCoreOf(graph(li), k = 1))
     assert(e2.getMessage.contains("k=1"))
   }
 
@@ -352,7 +356,7 @@ class GraphSpec extends SparkSpec {
     // d2 = {22}, d3 = {7} -> harmonic = 2/1 + 1/2 + 1/3 = 170/60
     val li = Seq((10L, 1L), (10L, 2L), (11L, 1L), (11L, 3L))
       .toDF("l_suppkey", "l_partkey")
-    val got = Graph.harmonicCentrality(li)
+    val got = Graph.harmonicCentralityOf(graph(li))
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq((20L, 2L, 1L, 1L, 2.833333)))
   }
@@ -377,7 +381,7 @@ class GraphSpec extends SparkSpec {
     // must keep node 20 only
     val li = Seq((10L, 1L), (20L, 1L), (20L, 2L))
       .toDF("l_suppkey", "l_partkey")
-    val got = Graph.harmonicCentrality(li, seedCount = 1)
+    val got = Graph.harmonicCentralityOf(graph(li), seedCount = 1)
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     // from 20: d1 = {3}, d2 = {40}, d3 = {5} -> 60+30+20 = 110/60
     assert(got == Seq((20L, 1L, 1L, 1L, 1.833333)))
@@ -387,7 +391,7 @@ class GraphSpec extends SparkSpec {
     // baskets give edges {1-2, 2-3, 1-3, 1-4} at support 1
     val li = Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L), (3L, 1L), (3L, 3L),
       (4L, 1L), (4L, 4L)).toDF("l_orderkey", "l_partkey")
-    val got = Graph.localClustering(li, minSupport = 1)
+    val got = Graph.localClusteringOf(Graph.coPurchaseEdges(li, 1000, minSupport = 1))
       .as[(Long, Long, Long, Double)].collect().toSeq
     // node 4 excluded (deg 1); nodes 2,3: deg 2, 1 triangle -> cc 1.0;
     // node 1: deg 3, 1 triangle -> 2/6 = .333333 (exact fixed point)
@@ -414,7 +418,7 @@ class GraphSpec extends SparkSpec {
     // (exercises the negative-q path the double-division rendering makes
     // convention-free)
     val li = Seq((1L, 1L), (2L, 2L)).toDF("l_suppkey", "l_partkey")
-    val got = Graph.communityModularity(li)
+    val got = Graph.communityModularityOf(graph(li))
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq((4L, 4L, 0L, -4L, -0.25)))
   }
@@ -440,27 +444,28 @@ class GraphSpec extends SparkSpec {
   }
 
   test("InteractionGraph: every ...Of operator matches its inline twin") {
+    // one graph shared by every operator vs a fresh graph per call
     val g = new Graph.InteractionGraph(tiny)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.collect().toSeq.map(_.toSeq)
-    assert(rows(Graph.pageRankOf(g)) == rows(Graph.pageRank(tiny)))
+    assert(rows(Graph.pageRankOf(g)) == rows(Graph.pageRankOf(graph(tiny))))
     assert(rows(Graph.personalizedPageRankOf(g, seedEvery = 1)) ==
-      rows(Graph.personalizedPageRank(tiny, seedEvery = 1)))
+      rows(Graph.personalizedPageRankOf(graph(tiny), seedEvery = 1)))
     assert(rows(Graph.bfsDistancesOf(g, seedEvery = 1)) ==
-      rows(Graph.bfsDistances(tiny, seedEvery = 1)))
+      rows(Graph.bfsDistancesOf(graph(tiny), seedEvery = 1)))
     assert(rows(Graph.labelPropagationOf(g)) ==
-      rows(Graph.labelPropagation(tiny)))
+      rows(Graph.labelPropagationOf(graph(tiny))))
     assert(rows(Graph.communityModularityOf(g)) ==
-      rows(Graph.communityModularity(tiny)))
-    assert(rows(Graph.assortativityOf(g)) == rows(Graph.assortativity(tiny)))
+      rows(Graph.communityModularityOf(graph(tiny))))
+    assert(rows(Graph.assortativityOf(g)) == rows(Graph.assortativityOf(graph(tiny))))
     assert(rows(Graph.harmonicCentralityOf(g, seedEvery = 1, seedCount = 8)) ==
-      rows(Graph.harmonicCentrality(tiny, seedEvery = 1, seedCount = 8)))
+      rows(Graph.harmonicCentralityOf(graph(tiny), seedEvery = 1, seedCount = 8)))
     assert(rows(Graph.kCoreOf(g, k = 2, rounds = 6)) ==
-      rows(Graph.kCore(tiny, k = 2, rounds = 6)))
-    assert(rows(Graph.hitsOf(g, iters = 1)) == rows(Graph.hits(tiny, iters = 1)))
+      rows(Graph.kCoreOf(graph(tiny), k = 2, rounds = 6)))
+    assert(rows(Graph.hitsOf(g, iters = 1)) == rows(Graph.hitsOf(graph(tiny), iters = 1)))
     assert(rows(Graph.weightedShortestPathsOf(
       new Graph.InteractionGraph(tinyWeighted))) ==
-      rows(Graph.weightedShortestPaths(tinyWeighted)))
+      rows(Graph.weightedShortestPathsOf(graph(tinyWeighted))))
   }
 
   private def tinyWeighted = Seq(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Recommend
+import graft.ops.{Memo, Recommend}
 
 /** Item-CF: hand-computed e6 cosines, integer score sums, owned-item
   * exclusion, and the neighbor-list cap.
@@ -62,7 +62,7 @@ class RecommendSpec extends SparkSpec {
   test("recommendationsFor: memoized artifact == direct chain; cached by " +
     "(session, key, params); audit from it == audit from the chain") {
     val orders = Seq((12L, 100L)).toDF("o_orderkey", "o_custkey")
-    Recommend.invalidateRecommendations()
+    Memo.invalidate()
     val a = Recommend.recommendationsFor("specfixture", lineitem, orders)
     val direct = Recommend.recommendItems(lineitem, orders)
     assert(a.collect().toSeq == direct.collect().toSeq)
@@ -77,7 +77,7 @@ class RecommendSpec extends SparkSpec {
     val viaArtifact = Recommend.coverageAuditOf(a, lineitem).collect().toSeq
     val viaChain = Recommend.coverageAudit(lineitem, orders).collect().toSeq
     assert(viaArtifact == viaChain)
-    Recommend.invalidateRecommendations()
+    Memo.invalidate()
   }
 
   test("biasModel: hand-computed chained means, incl. the negative item " +
