@@ -69,9 +69,9 @@ private[graft] object Memo {
     */
   def invalidate(family: String): Unit = drop(_ == family)
 
-  private def drop(family: String => Boolean): Unit =
+  private def drop(which: String => Boolean): Unit =
     store.keys.foreach { k =>
-      if (family(k._2)) store.remove(k).foreach(_.release())
+      if (which(k._2)) store.remove(k).foreach(_.release())
     }
 
   /** Drop every entry whose session's SparkContext has stopped.

@@ -14,15 +14,8 @@ class MemoSpec extends SparkSpec {
   private def checkpointRdds(df: DataFrame): Set[Int] =
     df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
 
-  private def persisted(ids: Set[Int]): Boolean = {
-    val live = spark.sparkContext.getPersistentRDDs
-    ids.forall(live.contains)
-  }
-
-  private def released(ids: Set[Int]): Boolean = {
-    val live = spark.sparkContext.getPersistentRDDs
-    ids.forall(id => !live.contains(id))
-  }
+  private def persistedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("invalidate() releases every entry's checkpoint RDDs; the next " +
     "request builds a new instance") {
@@ -37,10 +30,10 @@ class MemoSpec extends SparkSpec {
     assert(request() eq first)
     assert(builds == 1)
     val ids = checkpointRdds(first._1) ++ checkpointRdds(first._2)
-    assert(ids.size == 2 && persisted(ids))
+    assert(ids.size == 2 && ids.subsetOf(persistedRdds))
 
     Memo.invalidate()
-    assert(released(ids))
+    assert((ids & persistedRdds).isEmpty)
     val second = request()
     assert(!(second eq first))
     assert(builds == 2)
@@ -55,16 +48,17 @@ class MemoSpec extends SparkSpec {
     val g = Graph.interactionGraphFor("memo-spec", li)
     val graphIds = checkpointRdds(g.edges) ++ checkpointRdds(g.deg) ++
       checkpointRdds(g.withDeg)
-    val other = Memo(spark, "spec", "k")(own => own(spark.range(3).toDF().localCheckpoint()))
+    val other =
+      Memo(spark, "spec", "k")(own => own(spark.range(3).toDF().localCheckpoint()))
     val otherIds = checkpointRdds(other)
-    assert(graphIds.size == 3 && persisted(graphIds) && persisted(otherIds))
+    assert(graphIds.size == 3 && (graphIds ++ otherIds).subsetOf(persistedRdds))
 
     Graph.invalidateInteractionGraphs()
-    assert(released(graphIds))
-    assert(persisted(otherIds))
+    assert((graphIds & persistedRdds).isEmpty)
+    assert(otherIds.subsetOf(persistedRdds))
     assert(Memo[DataFrame](spark, "spec", "k")(_ => fail("rebuilt a kept entry")) eq other)
     assert(!(Graph.interactionGraphFor("memo-spec", li) eq g))
     Memo.invalidate()
-    assert(released(otherIds))
+    assert((otherIds & persistedRdds).isEmpty)
   }
 }
