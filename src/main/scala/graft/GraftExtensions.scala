@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
-import graft.functions.{BitmapAndCardinality, BitmapBuildAggregate, BitmapCardinality, BitmapMergeAggregate, DotProduct, HllAggregate, HllEstimate, HllMergeAggregate, HllZeroRegisters, KmvAggregate, KmvMergeAggregate, L2Norm, SampleKAggregate, TopKAggregate, Wkt4326Ring, ZOrderKey}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import graft.functions.{BitmapAndCardinality, BitmapBuildAggregate, BitmapCardinality, BitmapMergeAggregate, DotProduct, HllAggregate, HllEstimate, HllMergeAggregate, HllZeroRegisters, KmvAggregate, KmvMergeAggregate, L2Norm, MisraGriesAggregate, SampleKAggregate, TopKAggregate, Wkt4326Ring, ZOrderKey}
 
 /** SparkSessionExtensions entry point: makes the engine's custom expressions
   * available to ANY session (including pure-SQL users) via
@@ -11,125 +12,61 @@ import graft.functions.{BitmapAndCardinality, BitmapBuildAggregate, BitmapCardin
   * no code changes in the consuming application.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      exprs => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_l2norm"),
-      new ExpressionInfo(classOf[L2Norm].getName, "graft_l2norm"),
-      exprs => L2Norm(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_zorder"),
-      new ExpressionInfo(classOf[ZOrderKey].getName, "graft_zorder"),
-      exprs => ZOrderKey(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_wkt4326"),
-      new ExpressionInfo(classOf[Wkt4326Ring].getName, "graft_wkt4326"),
-      exprs => Wkt4326Ring(exprs(0), exprs(1), exprs(2), exprs(3),
-        GraftExtensions.boolLit(exprs(4), "graft_wkt4326 north"))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKAggregate].getName, "graft_topk"),
-      exprs => {
-        val k = exprs(2) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_topk k must be an integer literal, got $other")
-        }
-        TopKAggregate(exprs(0), exprs(1), k).toAggregateExpression()
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_kmv"),
-      new ExpressionInfo(classOf[KmvAggregate].getName, "graft_kmv"),
-      exprs => {
-        val k = exprs(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_kmv k must be an integer literal, got $other")
-        }
-        KmvAggregate(exprs(0), k).toAggregateExpression()
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_kmv_merge"),
-      new ExpressionInfo(classOf[KmvMergeAggregate].getName, "graft_kmv_merge"),
-      exprs => {
-        val k = exprs(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_kmv_merge k must be an integer literal, got $other")
-        }
-        KmvMergeAggregate(exprs(0), k).toAggregateExpression()
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap"),
-      new ExpressionInfo(classOf[BitmapBuildAggregate].getName, "graft_bitmap"),
-      exprs => BitmapBuildAggregate(exprs.head).toAggregateExpression()))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_merge"),
-      new ExpressionInfo(classOf[BitmapMergeAggregate].getName, "graft_bitmap_merge"),
-      exprs => BitmapMergeAggregate(exprs.head).toAggregateExpression()))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_card"),
-      new ExpressionInfo(classOf[BitmapCardinality].getName, "graft_bitmap_card"),
-      exprs => BitmapCardinality(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_bitmap_and_card"),
-      new ExpressionInfo(classOf[BitmapAndCardinality].getName, "graft_bitmap_and_card"),
-      exprs => BitmapAndCardinality(exprs(0), exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_hll"),
-      new ExpressionInfo(classOf[HllAggregate].getName, "graft_hll"),
-      exprs => HllAggregate(exprs.head).toAggregateExpression()))
-    e.injectFunction((
-      new FunctionIdentifier("graft_hll_merge"),
-      new ExpressionInfo(classOf[HllMergeAggregate].getName, "graft_hll_merge"),
-      exprs => HllMergeAggregate(exprs.head).toAggregateExpression()))
-    e.injectFunction((
-      new FunctionIdentifier("graft_hll_est"),
-      new ExpressionInfo(classOf[HllEstimate].getName, "graft_hll_est"),
-      exprs => HllEstimate(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_hll_zeros"),
-      new ExpressionInfo(classOf[HllZeroRegisters].getName, "graft_hll_zeros"),
-      exprs => HllZeroRegisters(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("graft_misra_gries"),
-      new ExpressionInfo(classOf[graft.functions.MisraGriesAggregate].getName,
-        "graft_misra_gries"),
-      exprs => {
-        val k = exprs(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_misra_gries k must be an integer literal, got $other")
-        }
-        graft.functions.MisraGriesAggregate(exprs(0), k)
-          .toAggregateExpression()
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("graft_sample_k"),
-      new ExpressionInfo(classOf[SampleKAggregate].getName, "graft_sample_k"),
-      exprs => {
-        val k = exprs(2) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_sample_k k must be an integer literal, got $other")
-        }
-        SampleKAggregate(exprs(0), exprs(1), k).toAggregateExpression()
-      }))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction((
+        new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
 }
 
 object GraftExtensions {
+  /** The engine's SQL functions as (SQL name, expression class, builder):
+    * the one list that both entry points register — [[GraftExtensions]] at
+    * session build time, [[graft.functions.VectorFunctions.register]] on an
+    * existing session.
+    */
+  private[graft] val functions: Seq[(String, Class[_], FunctionBuilder)] = Seq(
+    ("graft_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("graft_l2norm", classOf[L2Norm], e => L2Norm(e.head)),
+    ("graft_zorder", classOf[ZOrderKey], e => ZOrderKey(e(0), e(1))),
+    ("graft_wkt4326", classOf[Wkt4326Ring], e => Wkt4326Ring(e(0), e(1), e(2), e(3),
+      boolLit(e(4), "graft_wkt4326 north"))),
+    ("graft_topk", classOf[TopKAggregate], e =>
+      TopKAggregate(e(0), e(1), intLit(e(2), "graft_topk k")).toAggregateExpression()),
+    ("graft_kmv", classOf[KmvAggregate], e =>
+      KmvAggregate(e(0), intLit(e(1), "graft_kmv k")).toAggregateExpression()),
+    ("graft_kmv_merge", classOf[KmvMergeAggregate], e =>
+      KmvMergeAggregate(e(0), intLit(e(1), "graft_kmv_merge k")).toAggregateExpression()),
+    ("graft_bitmap", classOf[BitmapBuildAggregate], e =>
+      BitmapBuildAggregate(e.head).toAggregateExpression()),
+    ("graft_bitmap_merge", classOf[BitmapMergeAggregate], e =>
+      BitmapMergeAggregate(e.head).toAggregateExpression()),
+    ("graft_bitmap_card", classOf[BitmapCardinality], e => BitmapCardinality(e.head)),
+    ("graft_bitmap_and_card", classOf[BitmapAndCardinality], e =>
+      BitmapAndCardinality(e(0), e(1))),
+    ("graft_hll", classOf[HllAggregate], e => HllAggregate(e.head).toAggregateExpression()),
+    ("graft_hll_merge", classOf[HllMergeAggregate], e =>
+      HllMergeAggregate(e.head).toAggregateExpression()),
+    ("graft_hll_est", classOf[HllEstimate], e => HllEstimate(e.head)),
+    ("graft_hll_zeros", classOf[HllZeroRegisters], e => HllZeroRegisters(e.head)),
+    ("graft_misra_gries", classOf[MisraGriesAggregate], e =>
+      MisraGriesAggregate(e(0), intLit(e(1), "graft_misra_gries k")).toAggregateExpression()),
+    ("graft_sample_k", classOf[SampleKAggregate], e =>
+      SampleKAggregate(e(0), e(1), intLit(e(2), "graft_sample_k k")).toAggregateExpression()))
+
   /** Extracts a boolean literal argument (the TopKAggregate k-literal
     * pattern: plan-time parameters arrive as foldable literals).
     */
-  private[graft] def boolLit(
-      e: org.apache.spark.sql.catalyst.expressions.Expression,
-      what: String): Boolean = e match {
+  private[graft] def boolLit(e: Expression, what: String): Boolean = e match {
     case Literal(v: Boolean, _) => v
     case other => throw new IllegalArgumentException(
       s"$what must be a boolean literal, got $other")
+  }
+
+  /** Extracts an integer literal argument, e.g. a sketch's `k`. */
+  private[graft] def intLit(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
   }
 }

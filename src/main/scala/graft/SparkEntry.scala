@@ -143,7 +143,7 @@ object SparkEntry {
       val dim = li.groupBy("l_partkey", "l_suppkey")
         .agg(count(lit(1)).as("ps_count"))
       li.select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-        .join(graft.operators.Broadcasting.checked(dim, tag = "j1 dim"),
+        .join(graft.operators.Broadcasting.checked(dim),
           Seq("l_partkey", "l_suppkey"), "left")
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "ps_count")
     },
@@ -1609,8 +1609,7 @@ object SparkEntry {
       // cells from closed-form index math — proving NetCDF source + ingest
       // against an independent engine end to end. (.grid/.nc parity is
       // additionally pinned by NetcdfClassicSpec.)
-      val path = graft.sources.GridFixture.ensureWrittenNc(
-        graft.sources.GridFixture.defaultNcPath)
+      val path = graft.sources.GridFixture.ensureWrittenNc()
       Ingest.load(s.read.format("gridded").load(path))
         .select("xc_m", "yc_m", "date_forecast_generated", "date_forecast_for",
           "sea_ice_concentration_mean", "sea_ice_concentration_stddev")
@@ -1619,8 +1618,7 @@ object SparkEntry {
       // sea-ice extent per (forecast date, leadtime): cells over the 15%
       // NSIDC threshold x exact 625 km^2 cell area - the headline metric
       // of the reference's domain, BIGINT throughout
-      val path = graft.sources.GridFixture.ensureWrittenNc(
-        graft.sources.GridFixture.defaultNcPath)
+      val path = graft.sources.GridFixture.ensureWrittenNc()
       Ingest.iceExtent(
         Ingest.load(s.read.format("gridded").load(path)))
     },
@@ -1629,8 +1627,7 @@ object SparkEntry {
       // mean per (cell, leadtime) across forecast dates, anomaly = value
       // minus climatology - the anomaly-map primitive of the reference's
       // domain
-      val path = graft.sources.GridFixture.ensureWrittenNc(
-        graft.sources.GridFixture.defaultNcPath)
+      val path = graft.sources.GridFixture.ensureWrittenNc()
       Ingest.climatologyAnomaly(
         Ingest.load(s.read.format("gridded").load(path)))
     },
@@ -1639,8 +1636,7 @@ object SparkEntry {
       // -> one coarse cell per (time, leadtime), indices recovered exactly
       // from the 0.5-km-multiple centres, NaN mask cells excluded like the
       // oracle's NULLs; per block count/min/max/mean
-      val path = graft.sources.GridFixture.ensureWrittenNc(
-        graft.sources.GridFixture.defaultNcPath)
+      val path = graft.sources.GridFixture.ensureWrittenNc()
       graft.icenet.Ingest.regrid(s.read.format("gridded").load(path))
     },
     "gridded_ingest_hdf5" -> { (s, dir) =>
@@ -1648,8 +1644,7 @@ object SparkEntry {
       // (superblock v0, contiguous datasets — the bounded slice Hdf5Netcdf
       // decodes): same fixture content, same oracle, so the HDF5 byte path
       // gets its own independent-engine proof, not just spec coverage
-      val path = graft.sources.GridFixture.ensureWrittenH5(
-        graft.sources.GridFixture.defaultH5Path)
+      val path = graft.sources.GridFixture.ensureWrittenH5()
       Ingest.load(s.read.format("gridded").load(path))
         .select("xc_m", "yc_m", "date_forecast_generated", "date_forecast_for",
           "sea_ice_concentration_mean", "sea_ice_concentration_stddev")
@@ -1660,8 +1655,7 @@ object SparkEntry {
       // shuffle+deflate) through the same load path: same fixture content,
       // same oracle — the libver='latest' byte path gets its own
       // independent-engine proof
-      val path = graft.sources.GridFixture.ensureWrittenH5Latest(
-        graft.sources.GridFixture.defaultH5LatestPath)
+      val path = graft.sources.GridFixture.ensureWrittenH5Latest()
       Ingest.load(s.read.format("gridded").load(path))
         .select("xc_m", "yc_m", "date_forecast_generated", "date_forecast_for",
           "sea_ice_concentration_mean", "sea_ice_concentration_stddev")
@@ -1671,8 +1665,7 @@ object SparkEntry {
       // extensible-array chunk index (inline + data-block elements),
       // shuffle+deflate — what a daily-appending libver='latest' writer
       // produces; same fixture content, same closed-form oracle
-      val path = graft.sources.GridFixture.ensureWrittenH5Unlim(
-        graft.sources.GridFixture.defaultH5UnlimPath)
+      val path = graft.sources.GridFixture.ensureWrittenH5Unlim()
       Ingest.load(s.read.format("gridded").load(path))
         .select("xc_m", "yc_m", "date_forecast_generated", "date_forecast_for",
           "sea_ice_concentration_mean", "sea_ice_concentration_stddev")
@@ -1682,8 +1675,7 @@ object SparkEntry {
       // (BTHD header + BTLF leaf, filtered type-11 records),
       // shuffle+deflate — the last mainstream chunk-index class; same
       // fixture content, same closed-form oracle
-      val path = graft.sources.GridFixture.ensureWrittenH5Bt2(
-        graft.sources.GridFixture.defaultH5Bt2Path)
+      val path = graft.sources.GridFixture.ensureWrittenH5Bt2()
       Ingest.load(s.read.format("gridded").load(path))
         .select("xc_m", "yc_m", "date_forecast_generated", "date_forecast_for",
           "sea_ice_concentration_mean", "sea_ice_concentration_stddev")
@@ -1694,8 +1686,7 @@ object SparkEntry {
       // (46 links overflow both the one 512-byte direct block and the
       // one 45-record leaf); same fixture content, same closed-form
       // oracle — the byte path a wide libver='latest' NetCDF-4 file uses
-      val path = graft.sources.GridFixture.ensureWrittenH5Dense(
-        graft.sources.GridFixture.defaultH5DensePath)
+      val path = graft.sources.GridFixture.ensureWrittenH5Dense()
       Ingest.load(s.read.format("gridded").load(path))
         .select("xc_m", "yc_m", "date_forecast_generated", "date_forecast_for",
           "sea_ice_concentration_mean", "sea_ice_concentration_stddev")
@@ -1705,8 +1696,7 @@ object SparkEntry {
       // its root's direct rows, so link messages live behind an indirect
       // CHILD block (FHIB within FHIB — the recursive doubling-table
       // walk); same fixture content, same closed-form oracle
-      val path = graft.sources.GridFixture.ensureWrittenH5DenseIndirect(
-        graft.sources.GridFixture.defaultH5DenseIndirectPath)
+      val path = graft.sources.GridFixture.ensureWrittenH5DenseIndirect()
       Ingest.load(s.read.format("gridded").load(path))
         .select("xc_m", "yc_m", "date_forecast_generated", "date_forecast_for",
           "sea_ice_concentration_mean", "sea_ice_concentration_stddev")

@@ -119,89 +119,15 @@ object VectorFunctions {
   def l2norm(a: Column): Column =
     ColumnBridge.column(L2Norm(ColumnBridge.expression(a)))
 
-  /** Register `graft_dot` / `graft_l2norm` / `graft_topk` for spark.sql
-    * users on an EXISTING session (the builder-time path is
-    * [[graft.GraftExtensions]]). Idempotent.
+  /** Registers every engine SQL function (the table in
+    * `graft.GraftExtensions.functions`) for spark.sql users on an EXISTING
+    * session; the builder-time path is [[graft.GraftExtensions]].
+    * Idempotent.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_l2norm", exprs => L2Norm(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_zorder", exprs => ZOrderKey(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_wkt4326", exprs => Wkt4326Ring(exprs(0), exprs(1), exprs(2),
-        exprs(3), graft.GraftExtensions.boolLit(exprs(4), "graft_wkt4326 north")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_topk", exprs => {
-        val k = exprs(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_topk k must be an integer literal, got $other")
-        }
-        TopKAggregate(exprs(0), exprs(1), k).toAggregateExpression()
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_kmv", exprs => {
-        val k = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_kmv k must be an integer literal, got $other")
-        }
-        KmvAggregate(exprs(0), k).toAggregateExpression()
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_kmv_merge", exprs => {
-        val k = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_kmv_merge k must be an integer literal, got $other")
-        }
-        KmvMergeAggregate(exprs(0), k).toAggregateExpression()
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_misra_gries", exprs => {
-        val k = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_misra_gries k must be an integer literal, got $other")
-        }
-        MisraGriesAggregate(exprs(0), k).toAggregateExpression()
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sample_k", exprs => {
-        val k = exprs(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_sample_k k must be an integer literal, got $other")
-        }
-        SampleKAggregate(exprs(0), exprs(1), k).toAggregateExpression()
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap",
-      exprs => BitmapBuildAggregate(exprs.head).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap_merge",
-      exprs => BitmapMergeAggregate(exprs.head).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap_card", exprs => BitmapCardinality(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap_and_card",
-      exprs => BitmapAndCardinality(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hll",
-      exprs => HllAggregate(exprs.head).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hll_merge",
-      exprs => HllMergeAggregate(exprs.head).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hll_est", exprs => HllEstimate(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hll_zeros", exprs => HllZeroRegisters(exprs.head), "built-in")
+    graft.GraftExtensions.functions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

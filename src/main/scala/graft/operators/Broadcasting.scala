@@ -60,7 +60,6 @@ object Broadcasting {
       df: DataFrame,
       maxEstBytes: Long = DefaultMaxEstBytes,
       maxRows: Int = DefaultMaxRows,
-      tag: String = "broadcast side",
       recheck: Boolean = false): DataFrame =
     if (isBounded(df, maxEstBytes, maxRows, recheck)) broadcast(df) else df
 
@@ -94,10 +93,14 @@ object Broadcasting {
     * its cached verdict — see [[graft.streaming.StreamJoins.enrich]]'s
     * scaladoc, which documents the build-time-only guarantee and the
     * foreachBatch re-check escape hatch.
+    *
+    * All reads and mutations go through [[cacheLock]]; the probe itself
+    * runs outside it.
     */
   private val probeCache =
-    new java.util.concurrent.CopyOnWriteArrayList[
+    scala.collection.mutable.ArrayBuffer.empty[
       (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long, Int, Boolean)]
+  private val cacheLock = new Object
   private val ProbeCacheMax = 64
 
   private def isBounded(
@@ -111,10 +114,11 @@ object Broadcasting {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     (fixedWidth && est <= maxEstBytes) || {
       val key = df.queryExecution.optimizedPlan.canonicalized
-      import scala.jdk.CollectionConverters._
+      def sameSide(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+          b: Long, r: Int) = b == maxEstBytes && r == maxRows && p.sameResult(key)
       (if (recheck) None // bypass reads; the fresh verdict still lands below
-       else probeCache.asScala.collectFirst {
-         case (p, b, r, v) if b == maxEstBytes && r == maxRows && p.sameResult(key) => v
+       else cacheLock.synchronized {
+         probeCache.collectFirst { case (p, b, r, v) if sameSide(p, b, r) => v }
        })
         .getOrElse {
           val probed = df.limit(maxRows + 1)
@@ -124,12 +128,15 @@ object Broadcasting {
             .head()
           val verdict = probed.getLong(0) <= maxRows && probed.getLong(1) <= maxEstBytes
           // supersede any stale entry for this plan (a recheck must not
-          // leave the old verdict shadowing the new one), then bound size
-          probeCache.asScala.zipWithIndex.collectFirst {
-            case ((p, b, r, _), i) if b == maxEstBytes && r == maxRows && p.sameResult(key) => i
-          }.foreach(i => probeCache.remove(i))
-          if (probeCache.size >= ProbeCacheMax) probeCache.remove(0)
-          probeCache.add((key, maxEstBytes, maxRows, verdict))
+          // leave the old verdict shadowing the new one), then bound size.
+          // Lookup, removal and insert are one atomic step: an index found
+          // on one state of the list must not be removed from another.
+          cacheLock.synchronized {
+            val i = probeCache.indexWhere { case (p, b, r, _) => sameSide(p, b, r) }
+            if (i >= 0) probeCache.remove(i)
+            if (probeCache.size >= ProbeCacheMax) probeCache.remove(0)
+            probeCache += ((key, maxEstBytes, maxRows, verdict))
+          }
           verdict
         }
     }

@@ -133,14 +133,12 @@ object Eval {
     val withNbr = labels
       .withColumnRenamed("vec_id", "neighbor_id")
       .withColumnRenamed("label", "n_label")
-      .join(graft.operators.Broadcasting.checked(topk, tag = "mrr top-k pairs"),
-        Seq("neighbor_id"))
+      .join(graft.operators.Broadcasting.checked(topk), Seq("neighbor_id"))
       .select("query_id", "rnk", "n_label")
     val firstRel = labels
       .withColumnRenamed("vec_id", "query_id")
       .withColumnRenamed("label", "q_label")
-      .join(graft.operators.Broadcasting.checked(withNbr, tag = "mrr labeled pairs"),
-        Seq("query_id"))
+      .join(graft.operators.Broadcasting.checked(withNbr), Seq("query_id"))
       .groupBy("query_id", "q_label")
       .agg(min(when(col("n_label") === col("q_label"), col("rnk")))
         .as("first_rel"))
@@ -189,13 +187,11 @@ object Eval {
     val withNbr = labels
       .withColumnRenamed("vec_id", "neighbor_id")
       .withColumnRenamed("label", "n_label")
-      .join(graft.operators.Broadcasting.checked(topk, tag = "ndcg top-k pairs"),
-        Seq("neighbor_id"))
+      .join(graft.operators.Broadcasting.checked(topk), Seq("neighbor_id"))
     val dcg = labels
       .withColumnRenamed("vec_id", "query_id")
       .withColumnRenamed("label", "q_label")
-      .join(graft.operators.Broadcasting.checked(withNbr, tag = "ndcg labeled pairs"),
-        Seq("query_id"))
+      .join(graft.operators.Broadcasting.checked(withNbr), Seq("query_id"))
       .groupBy("query_id", "q_label")
       .agg(sum(when(col("n_label") === col("q_label"),
         element_at(wArr, col("rnk").cast("int"))).otherwise(0L)).as("dcg_e6"))

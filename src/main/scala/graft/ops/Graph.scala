@@ -990,8 +990,7 @@ object Graph {
           "to match)") { (deg, _) =>
       val lost = edges
         .join(graft.operators.Broadcasting.checked(
-          deg.filter(col("d") < k).select(col("node").as("v")),
-          tag = "k-core removed frontier"), Seq("v"))
+          deg.filter(col("d") < k).select(col("node").as("v"))), Seq("v"))
         .groupBy("u").agg(count(lit(1)).as("lost"))
         .withColumnRenamed("u", "node")
       (deg.filter(col("d") >= k)

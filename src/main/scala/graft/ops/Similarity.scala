@@ -72,7 +72,7 @@ object Similarity {
       tag: String): DataFrame = {
     val joined = cellKey match {
       case Some(key) =>
-        candidates.join(graft.operators.Broadcasting.checked(q, tag = tag), Seq(key))
+        candidates.join(graft.operators.Broadcasting.checked(q), Seq(key))
           .filter(col("vec_id") =!= col("query_id"))
       case None =>
         candidates.join(graft.operators.Broadcasting.checkedOrFail(q, tag = tag),
@@ -224,8 +224,7 @@ object Similarity {
     val probes = assignCells(qv, cents, nProbe, carry = Seq("ovec"))
       .select(col("vec_id").as("query_id"), col("ovec").as("qvec"), col("cell"))
     val scored = cells
-      .join(graft.operators.Broadcasting.checked(probes,
-        tag = "mips-ivf query probes"), Seq("cell"))
+      .join(graft.operators.Broadcasting.checked(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(graft.functions.VectorFunctions.dot(col("qvec"), col("ovec")), 6)
@@ -255,8 +254,7 @@ object Similarity {
     val labels = embeddings.select(col("vec_id"), col("label"))
     val topk = bruteForceTopK(embeddings, k, queryMod)
     val votes = labels.withColumnRenamed("vec_id", "neighbor_id")
-      .join(graft.operators.Broadcasting.checked(topk, tag = "knn top-k pairs"),
-        Seq("neighbor_id"))
+      .join(graft.operators.Broadcasting.checked(topk), Seq("neighbor_id"))
       .groupBy("query_id", "label").agg(count(lit(1)).as("votes"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("votes").desc, col("label").asc)
@@ -265,8 +263,7 @@ object Similarity {
       .select(col("query_id"), col("label").as("pred_label"), col("votes"))
     labels
       .select(col("vec_id").as("query_id"), col("label").as("true_label"))
-      .join(graft.operators.Broadcasting.checked(pred, tag = "knn predictions"),
-        Seq("query_id"))
+      .join(graft.operators.Broadcasting.checked(pred), Seq("query_id"))
       .select(col("query_id"), col("true_label"), col("pred_label"),
         col("votes"), (col("true_label") === col("pred_label")).as("correct"))
   }
@@ -624,8 +621,7 @@ object Similarity {
         round(col("qn2") - lit(2.0) * dot(col("qsub"), col("csub")) + col("cn2"), 6)
           .as("d"))
     val scored = codes
-      .join(graft.operators.Broadcasting.checked(dtable, tag = "pq distance table"),
-        Seq("sub_m", "code"))
+      .join(graft.operators.Broadcasting.checked(dtable), Seq("sub_m", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(round(sum(col("d")), 6).as("approx_dist"))
@@ -653,8 +649,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"),
         col("norm").as("qnorm"), col("cell"), col("label").as("qlabel"))
     val scored = corpus
-      .join(graft.operators.Broadcasting.checked(q, tag = "hard-negative queries"),
-        Seq("cell"))
+      .join(graft.operators.Broadcasting.checked(q), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id") && col("label") =!= col("qlabel"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("label").as("neg_label"),
@@ -705,8 +700,7 @@ object Similarity {
           .as("d"))
       .join(qcells, "query_id") // probe cell rides the broadcast table
     val scored = codes
-      .join(graft.operators.Broadcasting.checked(dtable, tag = "ivfpq distance table"),
-        Seq("sub_m", "code", "cell"))
+      .join(graft.operators.Broadcasting.checked(dtable), Seq("sub_m", "code", "cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(round(sum(col("d")), 6).as("approx_dist"))
@@ -739,7 +733,7 @@ object Similarity {
       .join(v.select(col("vec_id").as("neighbor_id"), col("vec"), col("norm")),
         Seq("neighbor_id"))
       .join(graft.operators.Broadcasting.checked(
-          querySubset(v, queryMod, withCell = false), tag = "rerank query set"),
+          querySubset(v, queryMod, withCell = false)),
         Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("qvec"), col("vec"), col("qnorm"), col("norm")).as("cos_sim"))

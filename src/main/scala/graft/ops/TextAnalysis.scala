@@ -389,7 +389,7 @@ object TextAnalysis {
       .cast("double") / 65536.0
     val sampled = docs.select(col("source"), col("doc_id"))
       .join(graft.operators.Broadcasting.checked(
-        rates.select("source", "sample_rate"), tag = "mix_apply rates"),
+        rates.select("source", "sample_rate")),
         Seq("source"))
       .filter(unit < col("sample_rate"))
       .groupBy("source").agg(count(lit(1)).as("sampled_docs"))

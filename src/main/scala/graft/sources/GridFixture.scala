@@ -51,11 +51,11 @@ object GridFixture {
   /** The fixture as a REAL NetCDF classic file: CDF-1 with `time` as the
     * unlimited record dimension and NC_DOUBLE data, so the
     * `gridded_ingest` oracle proves the NetCDF byte path against DuckDB
-    * end to end. Written once per path (idempotent; the oracle query may
+    * end to end. Written once (idempotent; the oracle query may
     * run several times per session — bench warmup + timed passes).
     */
-  def ensureWrittenNc(path: String): String =
-    ensureWith(path) { tmp =>
+  def ensureWrittenNc(): String =
+    ensureWith("graft_grid_fixture_v1.nc") { tmp =>
       NetcdfClassic.write(tmp, TimesMicros, Leadtimes, Yc, Xc,
         flat(meanAt), flat(stddevAt), recordTime = true)
     }
@@ -65,8 +65,8 @@ object GridFixture {
     * the `gridded_ingest_hdf5` oracle proves the HDF5 byte path against
     * DuckDB end to end, exactly like the classic `.nc` fixture does.
     */
-  def ensureWrittenH5(path: String): String =
-    ensureWith(path) { tmp =>
+  def ensureWrittenH5(): String =
+    ensureWith("graft_grid_fixture_h5_v1.nc") { tmp =>
       Hdf5Netcdf.write(tmp, TimesMicros, Leadtimes, Yc, Xc,
         flat(meanAt), flat(stddevAt))
     }
@@ -78,8 +78,8 @@ object GridFixture {
     * decoder its own independent-engine oracle
     * (`gridded_ingest_hdf5_latest`).
     */
-  def ensureWrittenH5Latest(path: String): String =
-    ensureWith(path) { tmp =>
+  def ensureWrittenH5Latest(): String =
+    ensureWith("graft_grid_fixture_h5_latest_v1.nc") { tmp =>
       Hdf5Netcdf.write(tmp, TimesMicros, Leadtimes, Yc, Xc,
         flat(meanAt), flat(stddevAt), chunkX = Some(5), filters = Seq(2, 1),
         latestFormat = true)
@@ -90,8 +90,8 @@ object GridFixture {
     * index, the shape a daily-appending `libver='latest'` writer
     * produces. Oracle: `gridded_ingest_hdf5_unlim`.
     */
-  def ensureWrittenH5Unlim(path: String): String =
-    ensureWith(path) { tmp =>
+  def ensureWrittenH5Unlim(): String =
+    ensureWith("graft_grid_fixture_h5_unlim_v1.nc") { tmp =>
       Hdf5Netcdf.write(tmp, TimesMicros, Leadtimes, Yc, Xc,
         flat(meanAt), flat(stddevAt), chunkX = Some(3), filters = Seq(2, 1),
         latestFormat = true, unlimitedTime = true)
@@ -102,8 +102,8 @@ object GridFixture {
     * `libver='latest'` writers emit for datasets with more than one
     * unlimited dimension. Oracle: `gridded_ingest_hdf5_bt2`.
     */
-  def ensureWrittenH5Bt2(path: String): String =
-    ensureWith(path) { tmp =>
+  def ensureWrittenH5Bt2(): String =
+    ensureWith("graft_grid_fixture_h5_bt2_v1.nc") { tmp =>
       Hdf5Netcdf.write(tmp, TimesMicros, Leadtimes, Yc, Xc,
         flat(meanAt), flat(stddevAt), chunkX = Some(5), filters = Seq(2, 1),
         latestFormat = true, btreeV2Index = true)
@@ -114,8 +114,8 @@ object GridFixture {
     * type-5 name B-tree — the many-variable `libver='latest'` root-group
     * shape. Oracle: `gridded_ingest_hdf5_dense`.
     */
-  def ensureWrittenH5Dense(path: String): String =
-    ensureWith(path) { tmp =>
+  def ensureWrittenH5Dense(): String =
+    ensureWith("graft_grid_fixture_h5_dense_v1.nc") { tmp =>
       Hdf5Netcdf.write(tmp, TimesMicros, Leadtimes, Yc, Xc,
         flat(meanAt), flat(stddevAt), chunkX = Some(5), filters = Seq(2, 1),
         latestFormat = true, denseLinks = true, denseLinkPad = 40)
@@ -125,21 +125,22 @@ object GridFixture {
     * block (the very-wide-group structure): 230 pad links push past the
     * root's direct rows into the row-3 child.
     */
-  def ensureWrittenH5DenseIndirect(path: String): String =
-    ensureWith(path) { tmp =>
+  def ensureWrittenH5DenseIndirect(): String =
+    ensureWith("graft_grid_fixture_h5_dense_ind_v1.nc") { tmp =>
       Hdf5Netcdf.write(tmp, TimesMicros, Leadtimes, Yc, Xc,
         flat(meanAt), flat(stddevAt), chunkX = Some(5), filters = Seq(2, 1),
         latestFormat = true, denseLinks = true, denseLinkPad = 230,
         denseIndirectChild = true)
     }
 
-  /** Writes a fixture file once per path. The write is atomic (temp file
-    * + rename): existence-as-done caching would otherwise trust a
-    * truncated file left by a crashed writer forever.
+  /** Writes the fixture file `name` under java.io.tmpdir once and returns
+    * its absolute path, which is stable for the JVM. The write is atomic
+    * (temp file + rename): existence-as-done caching would otherwise trust
+    * a truncated file left by a crashed writer forever.
     */
-  private def ensureWith(path: String)(write: String => Unit): String =
+  private def ensureWith(name: String)(write: String => Unit): String =
     synchronized {
-      val f = new java.io.File(path)
+      val f = new java.io.File(System.getProperty("java.io.tmpdir"), name)
       if (!f.exists()) {
         f.getParentFile.mkdirs()
         val tmp = new java.io.File(f.getParentFile, f.getName + ".tmp")
@@ -147,29 +148,6 @@ object GridFixture {
         java.nio.file.Files.move(tmp.toPath, f.toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       }
-      path
+      f.getAbsolutePath
     }
-
-  /** Session-stable default locations (under java.io.tmpdir). */
-  def defaultNcPath: String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_grid_fixture_v1.nc").getAbsolutePath
-  def defaultH5Path: String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_grid_fixture_h5_v1.nc").getAbsolutePath
-  def defaultH5LatestPath: String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_grid_fixture_h5_latest_v1.nc").getAbsolutePath
-  def defaultH5UnlimPath: String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_grid_fixture_h5_unlim_v1.nc").getAbsolutePath
-  def defaultH5Bt2Path: String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_grid_fixture_h5_bt2_v1.nc").getAbsolutePath
-  def defaultH5DensePath: String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_grid_fixture_h5_dense_v1.nc").getAbsolutePath
-  def defaultH5DenseIndirectPath: String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_grid_fixture_h5_dense_ind_v1.nc").getAbsolutePath
 }

@@ -42,8 +42,7 @@ object StreamJoins {
     */
   def enrich(facts: DataFrame, dim: DataFrame, key: String): DataFrame =
     facts.join(
-      graft.operators.Broadcasting.checked(dim, tag = s"enrichment dim on $key"),
-      Seq(key), "left")
+      graft.operators.Broadcasting.checked(dim), Seq(key), "left")
 
   /** Stream-static semi-join with a Bloom pre-filter — the dimension
     * variant [[enrich]] can't serve: a dim too big to broadcast per

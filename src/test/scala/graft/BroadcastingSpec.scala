@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+import scala.jdk.CollectionConverters._
 import graft.operators.Broadcasting
 
 /** Guard-railed broadcast (VERDICT r3 #3): proven-small sides broadcast,
@@ -85,5 +86,31 @@ class BroadcastingSpec extends SparkSpec {
     val (rechecked, recheckJobs) = jobsOf(Broadcasting.checked(side(), recheck = true))
     assert(hasBroadcastHint(rechecked))
     assert(recheckJobs >= 1, "recheck=true must bypass the cache and re-run the probe")
+  }
+
+  test("probe cache: concurrent rechecks and evictions never throw or leave a stale verdict") {
+    // every thread probes more distinct plans than the cache holds
+    // (ProbeCacheMax = 64), so evictions race the rechecks' replacements
+    def side() = Seq((1, "race-probe-a"), (2, "race-probe-b")).toDF("k", "v")
+    val threads = 4
+    val perThread = 20
+    val verdicts = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val workers = (0 until threads).map { t =>
+      new Thread(() =>
+        try (0 until perThread).foreach { i =>
+          Broadcasting.checked(Seq((i, s"race-distinct-$t-$i")).toDF("k", "v"))
+          // each thread ends on a recheck, so the side's entry is the
+          // newest in the cache when the threads are done
+          verdicts.add(hasBroadcastHint(Broadcasting.checked(side(), recheck = true)))
+        } catch { case e: Throwable => failures.add(e) })
+    }
+    workers.foreach(_.start())
+    workers.foreach(_.join())
+    assert(failures.isEmpty, s"concurrent checked calls threw: ${failures.peek()}")
+    assert(verdicts.size == threads * perThread && verdicts.asScala.forall(identity))
+    val (last, lastJobs) = jobsOf(Broadcasting.checked(side()))
+    assert(lastJobs == 0, "the rechecks' verdict must be cached")
+    assert(hasBroadcastHint(last), "the cached verdict must be the rechecks' verdict")
   }
 }

@@ -286,4 +286,46 @@ class TableOpsSpec extends SparkSpec {
       "a" -> (("1", "3", 1L, 2L)),
       "b" -> (("x", "y", 1L, 2L))))
   }
+
+  test("writer lock: every keyed write fails fast while a lock exists, forceUnlock clears it") {
+    val path = tmpDir("lock") + "/t"
+    TableOps.insertIgnore(spark, path, Seq((1, "a")).toDF("k", "v"), Seq("k"))
+    val lock = new java.io.File(path + ".lock")
+    assert(lock.createNewFile(), "precondition: a foreign writer's lock")
+    def contents = TableOps.read(spark, path).as[(Int, String)].collect().toSet
+    val incoming = Seq((2, "b")).toDF("k", "v")
+    var rowsAsked = false
+    val writes = Seq[(String, () => Unit)](
+      "insertIgnore" -> (() => TableOps.insertIgnore(spark, path, incoming, Seq("k"))),
+      "upsert" -> (() => TableOps.upsert(spark, path, incoming, Seq("k"))),
+      "overwriteView" -> (() => TableOps.overwriteView(spark, path, incoming)),
+      "appendWith" -> (() => TableOps.appendWith(spark, path) { _ =>
+        rowsAsked = true; Some(incoming) }))
+    writes.foreach { case (op, write) =>
+      val e = intercept[IllegalStateException](write())
+      assert(e.getMessage.contains(path + ".lock"), s"$op: ${e.getMessage}")
+      assert(lock.exists(), s"$op must not remove another writer's lock")
+      assert(contents == Set((1, "a")), s"$op changed a locked table")
+    }
+    assert(!rowsAsked, "appendWith must not read the table without the lock")
+    TableOps.forceUnlock(spark, path)
+    assert(!lock.exists())
+    TableOps.insertIgnore(spark, path, incoming, Seq("k"))
+    assert(contents == Set((1, "a"), (2, "b")))
+    assert(!lock.exists(), "a finished write releases its lock")
+  }
+
+  test("writer lock: a body that throws still releases the lock") {
+    val path = tmpDir("lockthrow") + "/t"
+    val e = intercept[RuntimeException] {
+      TableOps.withTableLock(spark, path) {
+        assert(new java.io.File(path + ".lock").exists(), "the body runs under the lock")
+        throw new RuntimeException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(!new java.io.File(path + ".lock").exists())
+    TableOps.insertIgnore(spark, path, Seq((1, "a")).toDF("k", "v"), Seq("k"))
+    assert(TableOps.read(spark, path).count() == 1)
+  }
 }
