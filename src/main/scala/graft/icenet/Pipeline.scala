@@ -1,7 +1,10 @@
 package graft.icenet
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.sql.Date
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, StructType}
 
 /** End-to-end IceNet ingest pipeline — the Spark re-expression of the
   * reference's per-file run (azfunctions/InputBlobTrigger/__init__.py:14-32):
@@ -30,6 +33,14 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     * partitions end to end. A drop on an already-known grid writes nothing
     * to the cell table, and new cells continue the existing ids
     * ([[updateGeometries]]).
+    *
+    * The drop's scalars are worked out once. One summary aggregate
+    * ([[summaryOf]]) gives each generation date's first and last forecast
+    * date and its row count, and the number of rows without a cell; it
+    * supplies the quarantine count, the fact write's partition values, the
+    * view refresh's incoming date and the meta rows. The fact write reports
+    * whether it landed a file, and the fact table's newest date comes from
+    * its directory listing, so neither needs a job.
     */
   def ingest(raw: DataFrame): Unit = {
     val loaded = Ingest.load(raw).cache()
@@ -39,6 +50,48 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
       updateLatestIncremental(loaded)
       updateMeta(loaded)
     } finally loaded.unpersist()
+  }
+
+  /** One generation date of a drop: its forecast dates' range and its rows. */
+  private case class DateRollup(generated: Date, first: Date, last: Date, rows: Long)
+
+  /** What one loaded frame determines, kept for the stages that follow.
+    * `landed` is the fact write's report ([[TableOps.insertIgnore]]), `None`
+    * when [[updateForecasts]] has not run on this frame.
+    */
+  private final case class Drop(
+      frame: DataFrame, dates: Seq[DateRollup], landed: Option[Boolean]) {
+    def newest: Date = dates.map(_.generated).filter(_ != null)
+      .maxByOption(_.toLocalDate).orNull
+  }
+
+  /** The last frame's [[Drop]]. Each stage takes only the frame, so the
+    * slot, keyed on the frame's identity, is what lets [[ingest]] and a
+    * caller that runs the stages one by one share one summary.
+    */
+  private var slot: Option[Drop] = None
+
+  /** The summary of `loaded`: the slot's when it holds this frame, else
+    * [[summaryOf]] the frame.
+    */
+  private def dropOf(loaded: DataFrame): Drop = synchronized {
+    slot.filter(_.frame eq loaded)
+      .getOrElse(remember(Drop(loaded, summaryOf(loaded, lit(false))._1, None)))
+  }
+
+  private def remember(drop: Drop): Drop = synchronized { slot = Some(drop); drop }
+
+  /** ONE aggregate, collected: per generation date the min and max forecast
+    * date and the row count, O(dates) rows, plus the number of rows
+    * matching `bad`.
+    */
+  private def summaryOf(rows: DataFrame, bad: Column): (Seq[DateRollup], Long) = {
+    val got = rows.groupBy(col("date_forecast_generated"))
+      .agg(min("date_forecast_for"), max("date_forecast_for"), count(lit(1)),
+        count(when(bad, true)))
+      .collect()
+    (got.map(r => DateRollup(r.getDate(0), r.getDate(1), r.getDate(2), r.getLong(3))).toSeq,
+      got.map(_.getLong(4)).sum)
   }
 
   /** Stage 2 (processor.py:192-266): distinct centroid axes -> cross join ->
@@ -94,16 +147,21 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
       col("date_forecast_generated"), col("date_forecast_for"), col("cell_id"),
       col("xc_m"), col("yc_m"),
       col("sea_ice_concentration_mean"), col("sea_ice_concentration_stddev"))
-    val bad = facts.filter(col("cell_id").isNull)
-    val nBad = bad.count()
+    // the drop's summary, taken over the joined rows so that the same
+    // aggregate counts the rows without a cell: centroid pairs are unique in
+    // the cell table, so the left join keeps every loaded row exactly once
+    val (dates, nBad) = summaryOf(facts, col("cell_id").isNull)
     // first-write-wins like the facts, so a re-delivered file quarantines
     // its rows once
-    if (nBad > 0) TableOps.insertIgnore(spark, quarantinePath, bad,
+    if (nBad > 0) TableOps.insertIgnore(spark, quarantinePath,
+      facts.filter(col("cell_id").isNull),
       Seq("date_forecast_generated", "date_forecast_for", "xc_m", "yc_m"))
-    TableOps.insertIgnore(spark, forecastPath,
+    val landed = TableOps.insertIgnore(spark, forecastPath,
       facts.filter(col("cell_id").isNotNull).drop("xc_m", "yc_m"),
       Seq("date_forecast_generated", "date_forecast_for", "cell_id"),
-      partitionCols = Seq("date_forecast_generated"))
+      partitionCols = Seq("date_forecast_generated"),
+      knownValues = Map("date_forecast_generated" -> dates.map(_.generated)))
+    remember(Drop(loaded, dates, Some(landed)))
     nBad
   }
 
@@ -168,37 +226,48 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     * and there is one rebuild: the facts of their max date, a
     * partition-pruned scan of the same fact-table read that gave the max.
     *
-    *  - incoming == facts' max: the view's next content is exactly that
-    *    date's facts, so it is rebuilt. The view's date is not read.
-    *  - otherwise (a late replay): the view is already correct when it
-    *    shows facts' max, and nothing runs; a stale or absent view is
-    *    rebuilt.
+    *  - incoming == facts' max, and the fact write of this frame landed a
+    *    file (or did not run on it): the view's next content is exactly
+    *    that date's facts, so it is rebuilt. The view's date is not read.
+    *  - otherwise (a late replay, or a re-delivery of the newest date that
+    *    landed nothing): the view is already correct when it shows facts'
+    *    max, and nothing runs; a stale or absent view is rebuilt.
     *
     * PipelineSpec asserts equality with [[latestView]]'s full recompute
     * after new-date, same-date and older-date ingests.
     */
   def updateLatestIncremental(loaded: DataFrame): Unit = {
-    val incoming = loaded.agg(max("date_forecast_generated")).head().getDate(0)
+    val drop = dropOf(loaded)
     if (!TableOps.exists(spark, forecastPath)) return
     // the decision scalar is the FACT table's max date, never the view's:
     // a crashed earlier ingest can leave facts ahead of the view, and an
     // incoming-vs-view comparison would silently pin the view to a stale
-    // date until a newer drop arrived. Both scalars are bounded
-    // (partition-column aggregates). An EMPTY incoming frame (incoming ==
-    // null) does not return early: this method is the designated heal point
-    // for a crash that landed between updateForecasts and the view refresh,
-    // and an empty drop must still detect facts-ahead-of-view and repair it.
+    // date until a newer drop arrived. Neither scalar runs a job: the
+    // incoming date is the drop's summary, the facts' max comes from the
+    // read's partition listing. An EMPTY incoming frame (incoming == null)
+    // does not return early: this method is the designated heal point for
+    // a crash that landed between updateForecasts and the view refresh, and
+    // an empty drop must still detect facts-ahead-of-view and repair it.
     val facts = TableOps.read(spark, forecastPath)
-    val factsMax = facts.agg(max("date_forecast_generated")).head().getDate(0)
+    val factsMax = newestDate(facts)
     if (factsMax == null) return // fact table exists but is empty: no view state
-    // read only when this drop is not the newest date
+    // read only when this drop is not the newest date, or landed nothing
     def viewShowsMax = TableOps.exists(spark, latestPath) &&
       TableOps.read(spark, latestPath).agg(max("date_forecast_generated"))
         .head().getDate(0) == factsMax
-    if (factsMax == incoming || !viewShowsMax)
+    val changed = factsMax == drop.newest && !drop.landed.contains(false)
+    if (changed || !viewShowsMax)
       TableOps.overwriteView(spark, latestPath,
         viewOf(facts.filter(col("date_forecast_generated") === lit(factsMax))))
   }
+
+  /** The newest generation date of a fact-table read, from the partition
+    * directories its file index listed (no Spark job); `null` when the
+    * table holds no data file.
+    */
+  private[graft] def newestDate(facts: DataFrame): Date =
+    TableOps.partitionValues(facts, "date_forecast_generated")
+      .collect { case d: Date => d }.maxByOption(_.toLocalDate).orNull
 
   /** Registers the warehouse tables and the latest view in the session
     * catalog, so a downstream SQL consumer (SURVEY §3.3's read path — the
@@ -225,16 +294,23 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
 
   /** Stage 5 (processor.py:346-407): meta rollup — grouped MIN/MAX/COUNT over
     * the generation date (A2) upserted last-write-wins on
-    * (date_forecast_generated, hemisphere) (processor.py:361,395-401).
+    * (date_forecast_generated, hemisphere) (processor.py:361,395-401). The
+    * rollup is the drop's summary, so the upsert takes a local frame of
+    * O(dates) rows and the loaded rows are not aggregated again.
     */
   def updateMeta(loaded: DataFrame): Unit = {
-    val rollup = loaded.groupBy(col("date_forecast_generated"))
-      .agg(
-        min("date_forecast_for").as("date_forecast_first"),
-        max("date_forecast_for").as("date_forecast_last"),
-        count(lit(1)).as("n_records"))
-      .withColumn("hemisphere", lit(h))
-    TableOps.upsert(spark, metaPath, rollup,
+    val rows = dropOf(loaded).dates.map(d => Row(d.generated, d.first, d.last, d.rows, h))
+    TableOps.upsert(spark, metaPath, spark.createDataFrame(rows.asJava, Pipeline.metaSchema),
       Seq("date_forecast_generated", "hemisphere"))
   }
+}
+
+object Pipeline {
+  /** `forecast_meta`'s columns, in the order the table was first written. */
+  private val metaSchema = StructType(Seq(
+    StructField("date_forecast_generated", DateType),
+    StructField("date_forecast_first", DateType),
+    StructField("date_forecast_last", DateType),
+    StructField("n_records", LongType, nullable = false),
+    StructField("hemisphere", StringType, nullable = false)))
 }

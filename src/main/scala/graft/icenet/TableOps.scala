@@ -2,7 +2,12 @@ package graft.icenet
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.Tables
 
 /** Keyed-table write semantics over parquet directories — the Spark
@@ -15,8 +20,8 @@ import graft.Tables
   *    (the cell table's continuing ids), and it skips the write when
   *    nothing is new.
   *  - S6 `INSERT ... SELECT ... ON CONFLICT DO UPDATE` (processor.py:375-403)
-  *    -> [[upsert]]: union-by-key with incoming precedence (last write wins),
-  *    committed as a whole-table swap.
+  *    -> [[upsert]]: one aggregate by key over the table and the batch, with
+  *    incoming precedence (last write wins), committed as a whole-table swap.
   *  - S7 `REFRESH MATERIALIZED VIEW` (processor.py:444-448) ->
   *    [[overwriteView]]: full recompute + crash-safe directory swap.
   *  - S8 `CREATE TABLE IF NOT EXISTS` (processor.py:198-209 etc.) ->
@@ -48,13 +53,17 @@ import graft.Tables
   * Scale notes: the anti-join reads ONLY the key columns of the existing side
   * (column pruning reaches the parquet scan) and, when the table is
   * partitioned, ONLY the partitions whose values occur in the incoming batch
-  * ([[freshRows]] seeds partition pruning from the incoming frame) — so a
-  * one-date ingest against years of facts touches one date's files, matching
-  * the PG unique-index cost model it replaces. The existing side is the BUILD
-  * side of the left-anti join only after pruning makes it small; Catalyst
-  * picks broadcast vs shuffle from the pruned size via AQE. Tables are
-  * partitioned by the date column when `partitionCols` is given, replacing
-  * the reference's b-tree indexes (processor.py:286-288) with pruning.
+  * ([[pruneToPartitions]]; the values come from the caller, or from one
+  * collect of the batch) — so a one-date ingest against years of facts
+  * touches one date's files, matching the PG unique-index cost model it
+  * replaces. A batch none of whose partitions the table holds yet skips the
+  * anti-join, and whether an append landed a file is read from a listing of
+  * the touched partitions; both come from the driver, with no job. The
+  * existing side is the BUILD side of the left-anti join only after pruning
+  * makes it small; Catalyst picks broadcast vs shuffle from the pruned size
+  * via AQE. Tables are partitioned by the date column when `partitionCols`
+  * is given, replacing the reference's b-tree indexes (processor.py:286-288)
+  * with pruning.
   */
 object TableOps {
 
@@ -128,18 +137,40 @@ object TableOps {
     * in the table are silently dropped (the PG unique-index arbitration).
     * Incoming duplicates are also collapsed to one row per key — same net
     * effect as the reference's row-at-a-time conflict handling.
+    *
+    * `knownValues` may give, per partition column, values the caller already
+    * knows the batch to hold; a superset is safe, since a partition column
+    * is a key column. They replace the job [[pruneToPartitions]] would
+    * otherwise run to collect them.
+    *
+    * Returns whether the write added a data file: `false` means no row
+    * landed. A first write always counts; an append compares a driver-side
+    * listing of the touched partitions before and after it, with no job. An
+    * unpartitioned append of no rows still writes one empty file, so it
+    * counts too.
     */
   def insertIgnore(
       spark: SparkSession, path: String, incoming: DataFrame,
-      keys: Seq[String], partitionCols: Seq[String] = Nil): Unit =
+      keys: Seq[String], partitionCols: Seq[String] = Nil,
+      knownValues: Map[String, Seq[Any]] = Map.empty): Boolean =
     withTableLock(spark, path) {
       heal(spark, path)
       val deduped = incoming.dropDuplicates(keys)
       existing(spark, path) match {
-        case None => write(deduped, path, "overwrite", partitionCols)
+        case None => write(deduped, path, "overwrite", partitionCols); true
         case Some(table) =>
           requireSameColumns(table, deduped, path)
-          append(table, freshIn(table, deduped, keys, partitionCols), path, partitionCols)
+          requirePartitionColsInKeys(partitionCols, keys)
+          val values = partitionCols.map(pc => pc -> knownValues.getOrElse(pc, valuesIn(deduped, pc)))
+          // a batch none of whose partitions the table holds yet (a new
+          // date) is all new: the anti-join is skipped
+          val overlaps = values.forall { case (pc, vs) =>
+            partitionValues(table, pc).exists(vs.contains) }
+          val dirs = partitionDirs(spark, path, values)
+          val before = dataFiles(spark, dirs)
+          append(table, if (overlaps) freshIn(table, deduped, keys, values) else deduped,
+            path, partitionCols)
+          !dataFiles(spark, dirs).subsetOf(before)
       }
     }
 
@@ -201,17 +232,17 @@ object TableOps {
     */
   def freshRows(
       spark: SparkSession, path: String, deduped: DataFrame,
-      keys: Seq[String], partitionCols: Seq[String] = Nil): DataFrame =
-    freshIn(read(spark, path), deduped, keys, partitionCols)
+      keys: Seq[String], partitionCols: Seq[String] = Nil): DataFrame = {
+    requirePartitionColsInKeys(partitionCols, keys)
+    freshIn(read(spark, path), deduped, keys,
+      partitionCols.map(pc => pc -> valuesIn(deduped, pc)))
+  }
 
-  /** [[freshRows]] against an already-read `table`. */
+  /** [[freshRows]] against an already-read `table`, pruned to `values`. */
   private def freshIn(
       table: DataFrame, deduped: DataFrame,
-      keys: Seq[String], partitionCols: Seq[String]): DataFrame = {
-    requirePartitionColsInKeys(partitionCols, keys)
-    val pruned = pruneToPartitions(table, deduped, partitionCols)
-    deduped.join(pruned.select(keys.map(col): _*), keys, "left_anti")
-  }
+      keys: Seq[String], values: Seq[(String, Seq[Any])]): DataFrame =
+    deduped.join(pruneToPartitions(table, values).select(keys.map(col): _*), keys, "left_anti")
 
   /** Partition pruning is only a valid optimization of the key anti-join
     * when the partition value is determined by the key: a partition column
@@ -225,21 +256,70 @@ object TableOps {
         s"of the key columns [${keys.mkString(",")}]: a partition column " +
         "outside the keys would break keyed-write pruning")
 
-  /** Existing rows restricted to the partition values present in the
-    * incoming batch. NULL partition values are matched explicitly —
-    * `isin()` never matches NULL, so a null-partition key would otherwise
-    * escape the prune and be re-appended.
+  /** The distinct values of `column` in a batch: one collecting job. */
+  private def valuesIn(batch: DataFrame, column: String): Seq[Any] =
+    batch.select(col(column)).distinct().collect().map(_.get(0)).toSeq
+
+  /** Existing rows restricted to the given partition values: those of the
+    * incoming batch, collected by [[valuesIn]] or given by the caller
+    * ([[insertIgnore]]'s `knownValues`). NULL partition values are matched
+    * explicitly — `isin()` never matches NULL, so a null-partition key
+    * would otherwise escape the prune and be re-appended.
     */
   private def pruneToPartitions(
-      existing: DataFrame, deduped: DataFrame,
-      partitionCols: Seq[String]): DataFrame =
-    partitionCols.foldLeft(existing) { (df, pc) =>
-      val values = deduped.select(col(pc)).distinct().collect().map(_.get(0))
-      val (nulls, nonNull) = values.partition(_ == null)
+      existing: DataFrame, values: Seq[(String, Seq[Any])]): DataFrame =
+    values.foldLeft(existing) { case (df, (pc, vs)) =>
+      val (nulls, nonNull) = vs.distinct.partition(_ == null)
       val base =
         if (nonNull.isEmpty) lit(false)
-        else col(pc).isin(nonNull.toIndexedSeq: _*)
+        else col(pc).isin(nonNull: _*)
       df.filter(if (nulls.nonEmpty) base || col(pc).isNull else base)
+    }
+
+  /** The directories a write of rows with these partition values lands in,
+    * named as Spark's writer names them (the value cast to a string in the
+    * session time zone, then escaped); the table dir itself when the table
+    * is unpartitioned.
+    */
+  private def partitionDirs(
+      spark: SparkSession, path: String, values: Seq[(String, Seq[Any])]): Seq[Path] = {
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    def asString(v: Any): String =
+      if (v == null) null else Cast(Literal(v), StringType, tz).eval().toString
+    values.foldLeft(Seq(new Path(path))) { case (dirs, (pc, vs)) =>
+      val names = vs.distinct.map(v => ExternalCatalogUtils.getPartitionPathString(pc, asString(v)))
+      for (d <- dirs; n <- names) yield new Path(d, n)
+    }
+  }
+
+  /** The visible files directly in `dirs`, listed on the driver. */
+  private def dataFiles(spark: SparkSession, dirs: Seq[Path]): Set[String] =
+    dirs.flatMap { d =>
+      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(d)) Nil
+      else fs.listStatus(d).filter(s => s.isFile && visible(s.getPath.getName))
+        .map(_.getPath.toString).toSeq
+    }.toSet
+
+  private def visible(name: String) = !name.startsWith("_") && !name.startsWith(".")
+
+  /** The values of partition column `column` over the partitions of
+    * `table` (a [[read]]) that hold a data file. They come from the file
+    * index the read built on the driver, so no Spark job runs; the values
+    * have the types `collect` returns (a `java.sql.Date` for a date).
+    */
+  def partitionValues(table: DataFrame, column: String): Seq[Any] =
+    table.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    } match {
+      case Some(fs: HadoopFsRelation) =>
+        val i = fs.partitionSchema.fieldIndex(column)
+        val dt = fs.partitionSchema(i).dataType
+        val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+        fs.location.listFiles(Nil, Nil).filter(_.files.nonEmpty)
+          .map(p => toScala(p.values.get(i, dt))).distinct
+      case other => throw new IllegalArgumentException(
+        s"partitionValues needs a file-table read, got ${other.getOrElse("no relation")}")
     }
 
   /** S6: last-write-wins upsert — matched keys take the incoming row,
@@ -247,20 +327,32 @@ object TableOps {
     * rewrites the whole table through [[replace]], which is sized for the
     * O(dates) `forecast_meta` rollup, the reference's one last-write-wins
     * table (processor.py:375-403).
+    *
+    * The table and the batch meet in ONE aggregate: their rows, unioned and
+    * tagged by side, are grouped by key, and each key keeps its incoming
+    * row when it has one. Incoming duplicates collapse to one of them.
     */
   def upsert(
       spark: SparkSession, path: String, incoming: DataFrame,
       keys: Seq[String]): Unit =
     withTableLock(spark, path) {
       heal(spark, path)
-      val deduped = incoming.dropDuplicates(keys)
       existing(spark, path) match {
-        case None => write(deduped, path, "overwrite", Nil)
+        case None => write(incoming.dropDuplicates(keys), path, "overwrite", Nil)
         case Some(table) =>
-          requireSameColumns(table, deduped, path)
-          val kept = table.join(deduped.select(keys.map(col): _*), keys, "left_anti")
+          requireSameColumns(table, incoming, path)
+          val cols = table.columns.toSeq
+          // `__in` rides along, so the struct has a field when every column is a key
+          val row = struct((cols.filterNot(keys.contains) :+ "__in").map(col): _*)
+          def tagged(df: DataFrame, in: Boolean) =
+            df.select(cols.map(col): _*).withColumn("__in", lit(in))
           replace(spark, path,
-            kept.select(deduped.columns.map(col).toIndexedSeq: _*).unionByName(deduped), Nil)
+            tagged(table, in = false).unionByName(tagged(incoming, in = true))
+              .groupBy(keys.map(col): _*)
+              .agg(max_by(row, col("__in")).as("__row"))
+              .select(cols.map(c =>
+                if (keys.contains(c)) col(c) else col("__row").getField(c).as(c)): _*),
+            Nil)
       }
     }
 

@@ -332,4 +332,53 @@ class PipelineSpec extends SparkSpec {
     p.ingest(rawGrid("2020-06-15", Seq(0, 1, 2, 3), Seq(1, 2, 3))) // grid extension
     viewEqualsOracle()
   }
+
+  test("a re-delivery of the newest date that lands nothing leaves the view's files") {
+    val p = freshPipeline()
+    p.ingest(rawFile("2020-06-01", 0.0))
+    p.ingest(rawFile("2020-06-08", 0.1)) // new date: the view advances
+    val viewFiles = filesUnder(p.latestPath)
+    p.ingest(rawFile("2020-06-08", 0.1)) // same file again: no fact row lands
+    assert(filesUnder(p.latestPath) == viewFiles, "a no-op re-delivery must not rebuild the view")
+    assert(TableOps.read(spark, p.latestPath).collect().toSet == p.latestView().collect().toSet)
+  }
+
+  test("a drop's job count: new date and older-date re-delivery") {
+    val p = freshPipeline()
+    p.ingest(rawFile("2020-06-01", 0.0))
+    p.ingest(rawFile("2020-06-08", 0.1))
+    // the drop's scalars come from one summary aggregate and the fact
+    // table's listing; a re-delivery of an older date rebuilds no view
+    val (_, newDate) = jobsOf(p.ingest(rawFile("2020-06-15", 0.2)))
+    assert(newDate == 23)
+    val (_, redelivery) = jobsOf(p.ingest(rawFile("2020-06-08", 0.1)))
+    assert(redelivery == 19)
+  }
+
+  test("the fact table's newest date from its listing equals max(date_forecast_generated)") {
+    import org.apache.hadoop.fs.Path
+    val p = freshPipeline()
+    def listingMaxIsMax(): Unit = {
+      val facts = TableOps.read(spark, p.forecastPath)
+      assert(p.newestDate(facts) == facts.agg(max("date_forecast_generated")).head().getDate(0))
+    }
+    p.ingest(rawFile("2020-06-08", 0.0))
+    listingMaxIsMax()
+    p.ingest(rawFile("2020-06-15", 0.1)) // new date
+    listingMaxIsMax()
+    p.ingest(rawFile("2020-06-01", 0.2)) // older date
+    listingMaxIsMax()
+    p.ingest(rawFile("2020-06-15", 0.1)) // same date
+    listingMaxIsMax()
+    // a compaction that crashed between its renames: the read resolves to
+    // the `.old` sibling
+    TableOps.compact(spark, p.forecastPath, partitionCols = Seq("date_forecast_generated"))
+    val fs = new Path(p.forecastPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    TableOps.read(spark, p.forecastPath).write.partitionBy("date_forecast_generated")
+      .parquet(p.forecastPath + ".staging")
+    fs.rename(new Path(p.forecastPath), new Path(p.forecastPath + ".old"))
+    assert(!fs.exists(new Path(p.forecastPath)))
+    listingMaxIsMax()
+    assert(p.newestDate(TableOps.read(spark, p.forecastPath)) == Date.valueOf("2020-06-15"))
+  }
 }

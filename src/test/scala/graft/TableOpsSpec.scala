@@ -81,6 +81,25 @@ class TableOpsSpec extends SparkSpec {
       Set((java.sql.Date.valueOf("2020-01-02"), 9)))
   }
 
+  test("insertIgnore reports whether its append added a data file") {
+    val path = tmpDir("landed") + "/t"
+    def insert(rows: Seq[(String, Int)], known: Map[String, Seq[Any]] = Map.empty) =
+      TableOps.insertIgnore(spark, path, rows.toDF("p", "n"), Seq("p", "n"),
+        partitionCols = Seq("p"), knownValues = known)
+    assert(insert(Seq(("a/b c", 1), (null, 2))))
+    assert(!insert(Seq(("a/b c", 1))), "nothing new must report no file")
+    // a new row in a partition whose directory name is escaped, in the null
+    // partition, in a new partition
+    assert(insert(Seq(("a/b c", 3))))
+    assert(insert(Seq((null, 4))))
+    assert(insert(Seq(("d", 5))))
+    // caller-known values may be a superset
+    assert(!insert(Seq(("a/b c", 3)), Map("p" -> Seq("a/b c", "zz", null))))
+    assert(insert(Seq(("a/b c", 6)), Map("p" -> Seq("a/b c", "zz"))))
+    assert(TableOps.read(spark, path).select("p", "n").as[(String, Int)].collect().toSet ==
+      Set(("a/b c", 1), (null, 2), ("a/b c", 3), (null, 4), ("d", 5), ("a/b c", 6)))
+  }
+
   test("appendWith: None writes nothing, rows append in the table's column order") {
     import org.apache.hadoop.fs.Path
     val path = tmpDir("appendWith") + "/t"
