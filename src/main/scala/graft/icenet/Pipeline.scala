@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, 
   * The reference's five PostgreSQL round-trips collapse into five DataFrame
   * plans over one warehouse directory. Re-running any file is a fixed point:
   * cells and forecasts are first-write-wins, meta is last-write-wins, the
-  * latest view is rebuilt from the fact table's newest date (a late replay
-  * leaves it as it is) — identical convergence semantics to the reference's
-  * ON CONFLICT clauses and view refresh (processor.py:256,333,395-401,444-448).
+  * latest view is rebuilt whenever the fact table's newest date holds other
+  * files than the view was built from (a late replay leaves it as it is) —
+  * identical convergence semantics to the reference's ON CONFLICT clauses
+  * and view refresh (processor.py:256,333,395-401,444-448).
   */
 class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
   private val h = hemi.name
@@ -37,10 +38,9 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     * The drop's scalars are worked out once. One summary aggregate
     * ([[summaryOf]]) gives each generation date's first and last forecast
     * date and its row count, and the number of rows without a cell; it
-    * supplies the quarantine count, the fact write's partition values, the
-    * view refresh's incoming date and the meta rows. The fact write reports
-    * whether it landed a file, and the fact table's newest date comes from
-    * its directory listing, so neither needs a job.
+    * supplies the quarantine count, the fact write's partition values and
+    * the meta rows. The view refresh needs no scalar of the drop: it
+    * compares the fact table's listing with the view's record, with no job.
     */
   def ingest(raw: DataFrame): Unit = {
     val loaded = Ingest.load(raw).cache()
@@ -55,15 +55,8 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
   /** One generation date of a drop: its forecast dates' range and its rows. */
   private case class DateRollup(generated: Date, first: Date, last: Date, rows: Long)
 
-  /** What one loaded frame determines, kept for the stages that follow.
-    * `landed` is the fact write's report ([[TableOps.insertIgnore]]), `None`
-    * when [[updateForecasts]] has not run on this frame.
-    */
-  private final case class Drop(
-      frame: DataFrame, dates: Seq[DateRollup], landed: Option[Boolean]) {
-    def newest: Date = dates.map(_.generated).filter(_ != null)
-      .maxByOption(_.toLocalDate).orNull
-  }
+  /** What one loaded frame determines, kept for the stages that follow. */
+  private final case class Drop(frame: DataFrame, dates: Seq[DateRollup])
 
   /** The last frame's [[Drop]]. Each stage takes only the frame, so the
     * slot, keyed on the frame's identity, is what lets [[ingest]] and a
@@ -76,7 +69,7 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     */
   private def dropOf(loaded: DataFrame): Drop = synchronized {
     slot.filter(_.frame eq loaded)
-      .getOrElse(remember(Drop(loaded, summaryOf(loaded, lit(false))._1, None)))
+      .getOrElse(remember(Drop(loaded, summaryOf(loaded, lit(false))._1)))
   }
 
   private def remember(drop: Drop): Drop = synchronized { slot = Some(drop); drop }
@@ -156,12 +149,12 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     if (nBad > 0) TableOps.insertIgnore(spark, quarantinePath,
       facts.filter(col("cell_id").isNull),
       Seq("date_forecast_generated", "date_forecast_for", "xc_m", "yc_m"))
-    val landed = TableOps.insertIgnore(spark, forecastPath,
+    TableOps.insertIgnore(spark, forecastPath,
       facts.filter(col("cell_id").isNotNull).drop("xc_m", "yc_m"),
       Seq("date_forecast_generated", "date_forecast_for", "cell_id"),
       partitionCols = Seq("date_forecast_generated"),
       knownValues = Map("date_forecast_generated" -> dates.map(_.generated)))
-    remember(Drop(loaded, dates, Some(landed)))
+    remember(Drop(loaded, dates))
     nBad
   }
 
@@ -221,44 +214,32 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     * `REFRESH MATERIALIZED VIEW` recomputes the view from ALL facts on
     * every ingest (processor.py:444-448), which at 100 TB re-reads years
     * of partitions to re-derive one date. The view only ever shows the
-    * max generation date, so its next state is decidable from bounded
-    * scalars (incoming date, fact table's max date, current view date),
-    * and there is one rebuild: the facts of their max date, a
-    * partition-pruned scan of the same fact-table read that gave the max.
+    * max generation date, so its content is fixed by that date's fact
+    * files, and there is one rebuild: the facts of their max date, a
+    * partition-pruned scan of the same fact-table read that listed them.
     *
-    *  - incoming == facts' max, and the fact write of this frame landed a
-    *    file (or did not run on it): the view's next content is exactly
-    *    that date's facts, so it is rebuilt. The view's date is not read.
-    *  - otherwise (a late replay, or a re-delivery of the newest date that
-    *    landed nothing): the view is already correct when it shows facts'
-    *    max, and nothing runs; a stale or absent view is rebuilt.
+    * The view records those files' names as its source
+    * ([[TableOps.overwriteView]]), committed with it. The rule is one
+    * comparison of that record with the read's listing, neither of which
+    * runs a job: equal, and nothing is written; different or missing, and
+    * the view is rebuilt. No scalar of `loaded` is consulted, so any drop,
+    * an empty one included, heals a view that a crash left behind its
+    * facts — a newer date, or more files of the same date.
     *
     * PipelineSpec asserts equality with [[latestView]]'s full recompute
-    * after new-date, same-date and older-date ingests.
+    * after new-date, same-date, older-date and empty ingests, crashed ones
+    * included.
     */
   def updateLatestIncremental(loaded: DataFrame): Unit = {
-    val drop = dropOf(loaded)
     if (!TableOps.exists(spark, forecastPath)) return
-    // the decision scalar is the FACT table's max date, never the view's:
-    // a crashed earlier ingest can leave facts ahead of the view, and an
-    // incoming-vs-view comparison would silently pin the view to a stale
-    // date until a newer drop arrived. Neither scalar runs a job: the
-    // incoming date is the drop's summary, the facts' max comes from the
-    // read's partition listing. An EMPTY incoming frame (incoming == null)
-    // does not return early: this method is the designated heal point for
-    // a crash that landed between updateForecasts and the view refresh, and
-    // an empty drop must still detect facts-ahead-of-view and repair it.
     val facts = TableOps.read(spark, forecastPath)
     val factsMax = newestDate(facts)
     if (factsMax == null) return // fact table exists but is empty: no view state
-    // read only when this drop is not the newest date, or landed nothing
-    def viewShowsMax = TableOps.exists(spark, latestPath) &&
-      TableOps.read(spark, latestPath).agg(max("date_forecast_generated"))
-        .head().getDate(0) == factsMax
-    val changed = factsMax == drop.newest && !drop.landed.contains(false)
-    if (changed || !viewShowsMax)
+    val source = TableOps.partitionFiles(facts, "date_forecast_generated")(factsMax)
+      .sorted.mkString("\n")
+    if (!TableOps.sourceOf(spark, latestPath).contains(source))
       TableOps.overwriteView(spark, latestPath,
-        viewOf(facts.filter(col("date_forecast_generated") === lit(factsMax))))
+        viewOf(facts.filter(col("date_forecast_generated") === lit(factsMax))), source)
   }
 
   /** The newest generation date of a fact-table read, from the partition
@@ -266,7 +247,7 @@ class Pipeline(spark: SparkSession, warehouse: String, hemi: Hemisphere) {
     * table holds no data file.
     */
   private[graft] def newestDate(facts: DataFrame): Date =
-    TableOps.partitionValues(facts, "date_forecast_generated")
+    TableOps.partitionFiles(facts, "date_forecast_generated").keys
       .collect { case d: Date => d }.maxByOption(_.toLocalDate).orNull
 
   /** Registers the warehouse tables and the latest view in the session

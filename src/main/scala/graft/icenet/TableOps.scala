@@ -1,13 +1,12 @@
 package graft.icenet
 
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.util.Using
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 import graft.Tables
 
 /** Keyed-table write semantics over parquet directories — the Spark
@@ -23,7 +22,8 @@ import graft.Tables
   *    -> [[upsert]]: one aggregate by key over the table and the batch, with
   *    incoming precedence (last write wins), committed as a whole-table swap.
   *  - S7 `REFRESH MATERIALIZED VIEW` (processor.py:444-448) ->
-  *    [[overwriteView]]: full recompute + crash-safe directory swap.
+  *    [[overwriteView]]: full recompute + crash-safe directory swap, with a
+  *    record of what the view was built from ([[sourceOf]]).
   *  - S8 `CREATE TABLE IF NOT EXISTS` (processor.py:198-209 etc.) ->
   *    [[exists]]/first-write bootstrap; parquet needs no DDL-before-write.
   *
@@ -57,13 +57,12 @@ import graft.Tables
   * collect of the batch) — so a one-date ingest against years of facts
   * touches one date's files, matching the PG unique-index cost model it
   * replaces. A batch none of whose partitions the table holds yet skips the
-  * anti-join, and whether an append landed a file is read from a listing of
-  * the touched partitions; both come from the driver, with no job. The
-  * existing side is the BUILD side of the left-anti join only after pruning
-  * makes it small; Catalyst picks broadcast vs shuffle from the pruned size
-  * via AQE. Tables are partitioned by the date column when `partitionCols`
-  * is given, replacing the reference's b-tree indexes (processor.py:286-288)
-  * with pruning.
+  * anti-join; the table's partitions come from the read's listing on the
+  * driver ([[partitionFiles]]), with no job. The existing side is the BUILD
+  * side of the left-anti join only after pruning makes it small; Catalyst
+  * picks broadcast vs shuffle from the pruned size via AQE. Tables are
+  * partitioned by the date column when `partitionCols` is given, replacing
+  * the reference's b-tree indexes (processor.py:286-288) with pruning.
   */
 object TableOps {
 
@@ -142,22 +141,16 @@ object TableOps {
     * knows the batch to hold; a superset is safe, since a partition column
     * is a key column. They replace the job [[pruneToPartitions]] would
     * otherwise run to collect them.
-    *
-    * Returns whether the write added a data file: `false` means no row
-    * landed. A first write always counts; an append compares a driver-side
-    * listing of the touched partitions before and after it, with no job. An
-    * unpartitioned append of no rows still writes one empty file, so it
-    * counts too.
     */
   def insertIgnore(
       spark: SparkSession, path: String, incoming: DataFrame,
       keys: Seq[String], partitionCols: Seq[String] = Nil,
-      knownValues: Map[String, Seq[Any]] = Map.empty): Boolean =
+      knownValues: Map[String, Seq[Any]] = Map.empty): Unit =
     withTableLock(spark, path) {
       heal(spark, path)
       val deduped = incoming.dropDuplicates(keys)
       existing(spark, path) match {
-        case None => write(deduped, path, "overwrite", partitionCols); true
+        case None => write(deduped, path, "overwrite", partitionCols)
         case Some(table) =>
           requireSameColumns(table, deduped, path)
           requirePartitionColsInKeys(partitionCols, keys)
@@ -165,12 +158,9 @@ object TableOps {
           // a batch none of whose partitions the table holds yet (a new
           // date) is all new: the anti-join is skipped
           val overlaps = values.forall { case (pc, vs) =>
-            partitionValues(table, pc).exists(vs.contains) }
-          val dirs = partitionDirs(spark, path, values)
-          val before = dataFiles(spark, dirs)
+            partitionFiles(table, pc).keys.exists(vs.contains) }
           append(table, if (overlaps) freshIn(table, deduped, keys, values) else deduped,
             path, partitionCols)
-          !dataFiles(spark, dirs).subsetOf(before)
       }
     }
 
@@ -238,11 +228,16 @@ object TableOps {
       partitionCols.map(pc => pc -> valuesIn(deduped, pc)))
   }
 
-  /** [[freshRows]] against an already-read `table`, pruned to `values`. */
+  /** [[freshRows]] against an already-read `table`, pruned to `values`.
+    * Keys compare null-safely (`<=>`), so a key holding a null matches
+    * itself, as it does in `dropDuplicates`; the existing side's keys are
+    * renamed, so that each side of a condition names one input.
+    */
   private def freshIn(
       table: DataFrame, deduped: DataFrame,
       keys: Seq[String], values: Seq[(String, Seq[Any])]): DataFrame =
-    deduped.join(pruneToPartitions(table, values).select(keys.map(col): _*), keys, "left_anti")
+    deduped.join(pruneToPartitions(table, values).select(keys.map(k => col(k).as(s"__$k")): _*),
+      keys.map(k => col(k) <=> col(s"__$k")).reduce(_ && _), "left_anti")
 
   /** Partition pruning is only a valid optimization of the key anti-join
     * when the partition value is determined by the key: a partition column
@@ -262,53 +257,26 @@ object TableOps {
 
   /** Existing rows restricted to the given partition values: those of the
     * incoming batch, collected by [[valuesIn]] or given by the caller
-    * ([[insertIgnore]]'s `knownValues`). NULL partition values are matched
-    * explicitly — `isin()` never matches NULL, so a null-partition key
-    * would otherwise escape the prune and be re-appended.
+    * ([[insertIgnore]]'s `knownValues`). Values compare null-safely
+    * (`<=>`), so a null value keeps the null partition, which `isin()` never
+    * matches: a null-partition key would otherwise escape the prune and be
+    * re-appended.
     */
   private def pruneToPartitions(
       existing: DataFrame, values: Seq[(String, Seq[Any])]): DataFrame =
     values.foldLeft(existing) { case (df, (pc, vs)) =>
-      val (nulls, nonNull) = vs.distinct.partition(_ == null)
-      val base =
-        if (nonNull.isEmpty) lit(false)
-        else col(pc).isin(nonNull: _*)
-      df.filter(if (nulls.nonEmpty) base || col(pc).isNull else base)
+      df.filter(vs.distinct.map(v => col(pc) <=> lit(v)).foldLeft(lit(false))(_ || _))
     }
 
-  /** The directories a write of rows with these partition values lands in,
-    * named as Spark's writer names them (the value cast to a string in the
-    * session time zone, then escaped); the table dir itself when the table
-    * is unpartitioned.
+  /** The data files of `table` (a [[read]]) per value of its partition
+    * column `column`, each named relative to the table root
+    * (`column=value/part-…`), so the names stay the same when the read
+    * resolves to `.old`. Only partitions that hold a data file appear. They
+    * come from the file index the read built on the driver, so no Spark job
+    * runs; the values have the types `collect` returns (a `java.sql.Date`
+    * for a date).
     */
-  private def partitionDirs(
-      spark: SparkSession, path: String, values: Seq[(String, Seq[Any])]): Seq[Path] = {
-    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
-    def asString(v: Any): String =
-      if (v == null) null else Cast(Literal(v), StringType, tz).eval().toString
-    values.foldLeft(Seq(new Path(path))) { case (dirs, (pc, vs)) =>
-      val names = vs.distinct.map(v => ExternalCatalogUtils.getPartitionPathString(pc, asString(v)))
-      for (d <- dirs; n <- names) yield new Path(d, n)
-    }
-  }
-
-  /** The visible files directly in `dirs`, listed on the driver. */
-  private def dataFiles(spark: SparkSession, dirs: Seq[Path]): Set[String] =
-    dirs.flatMap { d =>
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(d)) Nil
-      else fs.listStatus(d).filter(s => s.isFile && visible(s.getPath.getName))
-        .map(_.getPath.toString).toSeq
-    }.toSet
-
-  private def visible(name: String) = !name.startsWith("_") && !name.startsWith(".")
-
-  /** The values of partition column `column` over the partitions of
-    * `table` (a [[read]]) that hold a data file. They come from the file
-    * index the read built on the driver, so no Spark job runs; the values
-    * have the types `collect` returns (a `java.sql.Date` for a date).
-    */
-  def partitionValues(table: DataFrame, column: String): Seq[Any] =
+  def partitionFiles(table: DataFrame, column: String): Map[Any, Seq[String]] =
     table.queryExecution.analyzed.collectFirst {
       case l: LogicalRelation => l.relation
     } match {
@@ -316,10 +284,14 @@ object TableOps {
         val i = fs.partitionSchema.fieldIndex(column)
         val dt = fs.partitionSchema(i).dataType
         val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+        // a file's name and its partition directories' names
+        def relative(f: Path) = Iterator.iterate(f)(_.getParent)
+          .take(fs.partitionSchema.length + 1).map(_.getName).toSeq.reverse.mkString("/")
         fs.location.listFiles(Nil, Nil).filter(_.files.nonEmpty)
-          .map(p => toScala(p.values.get(i, dt))).distinct
+          .groupMapReduce(p => toScala(p.values.get(i, dt)))(
+            _.files.map(f => relative(f.getPath)))(_ ++ _)
       case other => throw new IllegalArgumentException(
-        s"partitionValues needs a file-table read, got ${other.getOrElse("no relation")}")
+        s"partitionFiles needs a file-table read, got ${other.getOrElse("no relation")}")
     }
 
   /** S6: last-write-wins upsert — matched keys take the incoming row,
@@ -356,12 +328,31 @@ object TableOps {
       }
     }
 
-  /** S7: materialized-view refresh — full recompute, crash-safe swap. */
-  def overwriteView(spark: SparkSession, path: String, view: DataFrame): Unit =
+  /** S7: materialized-view refresh — full recompute, crash-safe swap.
+    * `source` records what the view was built from: [[replace]] writes it
+    * as a `_source` file into the successor before the commit rename, so the
+    * view and its record commit together, and [[sourceOf]] reads it back.
+    */
+  def overwriteView(spark: SparkSession, path: String, view: DataFrame, source: String): Unit =
     withTableLock(spark, path) {
       heal(spark, path)
-      replace(spark, path, view, Nil)
+      replace(spark, path, view, Nil, Some(source))
     }
+
+  /** The `source` of the view's last committed [[overwriteView]], read
+    * through [[resolve]] (so from `.old` after a crash between
+    * [[replace]]'s renames); `None` when there is no view or it has no
+    * record.
+    */
+  def sourceOf(spark: SparkSession, path: String): Option[String] = {
+    val record = new Path(resolve(spark, path), SourceFile)
+    val fs = record.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option.when(fs.exists(record))(
+      Using.resource(fs.open(record))(in => new String(in.readAllBytes(), UTF_8)))
+  }
+
+  /** The name of [[overwriteView]]'s record; readers skip `_` names. */
+  private val SourceFile = "_source"
 
   /** Compacts a table's files into ~`targetBytes` outputs via the same
     * crash-safe swap as a view refresh. Incremental keyed ingest
@@ -403,7 +394,7 @@ object TableOps {
     */
   private def replace(
       spark: SparkSession, path: String, df: DataFrame,
-      partitionCols: Seq[String]): Unit = {
+      partitionCols: Seq[String], source: Option[String] = None): Unit = {
     val staging = new Path(path + ".staging")
     val old = new Path(path + ".old")
     val cur = new Path(path)
@@ -411,6 +402,8 @@ object TableOps {
     // cannot overwrite an input path of the running plan anyway)
     write(df, staging.toString, "overwrite", partitionCols)
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    source.foreach(s =>
+      Using.resource(fs.create(new Path(staging, SourceFile), true))(_.write(s.getBytes(UTF_8))))
     fs.delete(old, true) // leftover from an earlier crash, already superseded
     if (fs.exists(cur)) fs.rename(cur, old)
     fs.rename(staging, cur) // commit point

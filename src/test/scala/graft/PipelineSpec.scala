@@ -347,12 +347,59 @@ class PipelineSpec extends SparkSpec {
     val p = freshPipeline()
     p.ingest(rawFile("2020-06-01", 0.0))
     p.ingest(rawFile("2020-06-08", 0.1))
-    // the drop's scalars come from one summary aggregate and the fact
-    // table's listing; a re-delivery of an older date rebuilds no view
+    // the drop's scalars come from one summary aggregate; the view refresh
+    // compares the fact table's listing with the view's record, so a
+    // re-delivery of an older date runs no job for the view
     val (_, newDate) = jobsOf(p.ingest(rawFile("2020-06-15", 0.2)))
     assert(newDate == 23)
     val (_, redelivery) = jobsOf(p.ingest(rawFile("2020-06-08", 0.1)))
-    assert(redelivery == 19)
+    assert(redelivery == 17)
+  }
+
+  test("a crashed same-date append is healed by a re-delivery, a late replay or an EMPTY drop") {
+    val d = "2020-06-08"
+    // a 3x3 drop for d, then a 4x3 drop for d whose view refresh never ran:
+    // the facts of d gained a grid column the view does not show
+    def crashed(): Pipeline = {
+      val p = freshPipeline()
+      p.ingest(rawGrid(d, Seq(1, 2, 3), Seq(1, 2, 3)))
+      val wider = Ingest.load(rawGrid(d, Seq(1, 2, 3, 4), Seq(1, 2, 3))).cache()
+      try { p.updateGeometries(wider); p.updateForecasts(wider) } finally wider.unpersist()
+      p
+    }
+    def viewEqualsFull(p: Pipeline, after: String): Unit = {
+      val full = p.latestView().collect().toSet
+      val view = TableOps.read(spark, p.latestPath).collect().toSet
+      assert(full.size == 24) // 12 cells x 2 leadtimes
+      assert(view.size == full.size, s"$after: the view holds ${view.size} rows")
+      assert(view == full, after)
+    }
+    val redelivered = crashed()
+    redelivered.ingest(rawGrid(d, Seq(1, 2, 3, 4), Seq(1, 2, 3)))
+    viewEqualsFull(redelivered, "after a same-date re-delivery")
+    val replayed = crashed()
+    replayed.ingest(rawGrid("2020-06-01", Seq(1, 2, 3), Seq(1, 2, 3)))
+    viewEqualsFull(replayed, "after an older-date replay")
+    val emptied = crashed()
+    val empty = Ingest.load(rawGrid(d, Seq(1), Seq(1)).limit(0)).cache()
+    try emptied.updateLatestIncremental(empty) finally empty.unpersist()
+    viewEqualsFull(emptied, "after an EMPTY drop")
+  }
+
+  test("a view without its source record is rebuilt once") {
+    import org.apache.hadoop.fs.Path
+    val p = freshPipeline()
+    p.ingest(rawFile("2020-06-08", 0.0))
+    val fs = new Path(p.latestPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(p.latestPath, "_source"), false))
+    val unrecorded = filesUnder(p.latestPath)
+    p.ingest(rawFile("2020-06-01", 0.1)) // older date: rebuilds, the record is missing
+    val rebuilt = filesUnder(p.latestPath)
+    assert(rebuilt.keySet != unrecorded.keySet, "a view without a record must be rebuilt")
+    assert(TableOps.sourceOf(spark, p.latestPath).nonEmpty)
+    assert(TableOps.read(spark, p.latestPath).collect().toSet == p.latestView().collect().toSet)
+    p.ingest(rawFile("2020-06-01", 0.2)) // older date again: the record matches
+    assert(filesUnder(p.latestPath) == rebuilt, "a recorded view must not be rebuilt again")
   }
 
   test("the fact table's newest date from its listing equals max(date_forecast_generated)") {

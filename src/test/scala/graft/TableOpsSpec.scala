@@ -42,8 +42,8 @@ class TableOpsSpec extends SparkSpec {
 
   test("S7 overwriteView: full recompute replaces previous content") {
     val path = tmpDir("s7") + "/v"
-    TableOps.overwriteView(spark, path, Seq((1, "old")).toDF("k", "v"))
-    TableOps.overwriteView(spark, path, Seq((2, "new")).toDF("k", "v"))
+    TableOps.overwriteView(spark, path, Seq((1, "old")).toDF("k", "v"), "old")
+    TableOps.overwriteView(spark, path, Seq((2, "new")).toDF("k", "v"), "new")
     val got = TableOps.read(spark, path).as[(Int, String)].collect().toSet
     assert(got == Set((2, "new")))
   }
@@ -81,23 +81,43 @@ class TableOpsSpec extends SparkSpec {
       Set((java.sql.Date.valueOf("2020-01-02"), 9)))
   }
 
-  test("insertIgnore reports whether its append added a data file") {
+  test("insertIgnore into escaped and null partitions, with caller-given values") {
     val path = tmpDir("landed") + "/t"
     def insert(rows: Seq[(String, Int)], known: Map[String, Seq[Any]] = Map.empty) =
       TableOps.insertIgnore(spark, path, rows.toDF("p", "n"), Seq("p", "n"),
         partitionCols = Seq("p"), knownValues = known)
-    assert(insert(Seq(("a/b c", 1), (null, 2))))
-    assert(!insert(Seq(("a/b c", 1))), "nothing new must report no file")
+    def contents = TableOps.read(spark, path).select("p", "n").as[(String, Int)].collect().toSet
+    insert(Seq(("a/b c", 1), (null, 2)))
+    assert(contents == Set(("a/b c", 1), (null, 2)))
+    insert(Seq(("a/b c", 1)))
+    assert(contents == Set(("a/b c", 1), (null, 2)), "a known row must not land again")
     // a new row in a partition whose directory name is escaped, in the null
     // partition, in a new partition
-    assert(insert(Seq(("a/b c", 3))))
-    assert(insert(Seq((null, 4))))
-    assert(insert(Seq(("d", 5))))
+    insert(Seq(("a/b c", 3)))
+    assert(contents == Set(("a/b c", 1), (null, 2), ("a/b c", 3)))
+    insert(Seq((null, 4)))
+    assert(contents == Set(("a/b c", 1), (null, 2), ("a/b c", 3), (null, 4)))
+    insert(Seq(("d", 5)))
+    assert(contents == Set(("a/b c", 1), (null, 2), ("a/b c", 3), (null, 4), ("d", 5)))
     // caller-known values may be a superset
-    assert(!insert(Seq(("a/b c", 3)), Map("p" -> Seq("a/b c", "zz", null))))
-    assert(insert(Seq(("a/b c", 6)), Map("p" -> Seq("a/b c", "zz"))))
-    assert(TableOps.read(spark, path).select("p", "n").as[(String, Int)].collect().toSet ==
+    insert(Seq(("a/b c", 3)), Map("p" -> Seq("a/b c", "zz", null)))
+    assert(contents == Set(("a/b c", 1), (null, 2), ("a/b c", 3), (null, 4), ("d", 5)))
+    insert(Seq(("a/b c", 6)), Map("p" -> Seq("a/b c", "zz")))
+    assert(contents ==
       Set(("a/b c", 1), (null, 2), ("a/b c", 3), (null, 4), ("d", 5), ("a/b c", 6)))
+  }
+
+  test("insertIgnore matches a key that holds a null: a re-insert lands nothing") {
+    Seq[(String, Seq[String])]("flat" -> Nil, "byK" -> Seq("k"))
+      .foreach { case (name, partitionCols) =>
+        val path = tmpDir(s"nullKey$name") + "/t"
+        def insert() = TableOps.insertIgnore(spark, path,
+          Seq(("a", null: String)).toDF("k", "v"), Seq("k", "v"), partitionCols)
+        insert()
+        insert()
+        assert(TableOps.read(spark, path).select("k", "v").as[(String, String)].collect().toSeq ==
+          Seq(("a", null)), s"partitioned by [${partitionCols.mkString(",")}]")
+      }
   }
 
   test("appendWith: None writes nothing, rows append in the table's column order") {
@@ -133,7 +153,7 @@ class TableOpsSpec extends SparkSpec {
     val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
     def setState(base: String): String = {
       val path = base + "/t"
-      TableOps.overwriteView(spark, path, Seq((1, "v1")).toDF("k", "v"))
+      TableOps.overwriteView(spark, path, Seq((1, "v1")).toDF("k", "v"), "v1")
       path
     }
 
@@ -162,11 +182,32 @@ class TableOpsSpec extends SparkSpec {
     // window C: crash after .staging -> cur, before delete .old — the new
     // version is committed and wins over the leftover .old
     val pc = setState(tmpDir("crashC"))
-    TableOps.overwriteView(spark, pc + ".tmpnew", Seq((2, "v2")).toDF("k", "v"))
+    TableOps.overwriteView(spark, pc + ".tmpnew", Seq((2, "v2")).toDF("k", "v"), "v2")
     fs.rename(new Path(pc), new Path(pc + ".old"))
     fs.rename(new Path(pc + ".tmpnew"), new Path(pc))
     assert(TableOps.read(spark, pc).as[(Int, String)].collect().toSet ==
       Set((2, "v2")))
+  }
+
+  test("sourceOf: the record commits with its view, so a crash between renames reads .old's") {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val path = tmpDir("source") + "/v"
+    assert(TableOps.sourceOf(spark, path).isEmpty)
+    TableOps.overwriteView(spark, path, Seq((1, "v1")).toDF("k", "v"), "built from v1")
+    assert(TableOps.sourceOf(spark, path).contains("built from v1"))
+    // crash after cur -> .old, before .staging -> cur: the staged successor
+    // and its record are not committed, the reader falls back to .old
+    TableOps.overwriteView(spark, path + ".tmpnew", Seq((2, "v2")).toDF("k", "v"), "built from v2")
+    fs.rename(new Path(path + ".tmpnew"), new Path(path + ".staging"))
+    fs.rename(new Path(path), new Path(path + ".old"))
+    assert(TableOps.read(spark, path).as[(Int, String)].collect().toSet == Set((1, "v1")))
+    assert(TableOps.sourceOf(spark, path).contains("built from v1"))
+    // the next refresh heals, and its record replaces the old one
+    TableOps.overwriteView(spark, path, Seq((3, "v3")).toDF("k", "v"), "built from v3")
+    assert(TableOps.read(spark, path).as[(Int, String)].collect().toSet == Set((3, "v3")))
+    assert(TableOps.sourceOf(spark, path).contains("built from v3"))
+    assert(!fs.exists(new Path(path + ".old")) && !fs.exists(new Path(path + ".staging")))
   }
 
   test("schema drift is rejected, not silently appended") {
@@ -317,7 +358,7 @@ class TableOpsSpec extends SparkSpec {
     val writes = Seq[(String, () => Unit)](
       "insertIgnore" -> (() => TableOps.insertIgnore(spark, path, incoming, Seq("k"))),
       "upsert" -> (() => TableOps.upsert(spark, path, incoming, Seq("k"))),
-      "overwriteView" -> (() => TableOps.overwriteView(spark, path, incoming)),
+      "overwriteView" -> (() => TableOps.overwriteView(spark, path, incoming, "b")),
       "appendWith" -> (() => TableOps.appendWith(spark, path) { _ =>
         rowsAsked = true; Some(incoming) }))
     writes.foreach { case (op, write) =>
